@@ -1,3 +1,3 @@
-"""Query/materialization plan registry."""
-
-from hpc_hd_textreuse_etl_spark.plans.queries import QUERIES, QuerySpec  # noqa: F401
+"""Materialization plans: the text-reuse DAG, metadata, serving and
+curation. The query registry lives in ``plans.queries`` and is imported
+directly by the callers that need it."""

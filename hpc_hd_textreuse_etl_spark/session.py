@@ -24,6 +24,17 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """Half of the host's physical memory, capped at 16g — a driver heap
+    that fits the machine it starts on. ``SPARK_GRAFT_DRIVER_MEM``
+    overrides it for a deployment."""
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{min(phys // 2 // 2**20, 16 * 1024)}m"
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on EXECUTOR Python workers.
 
@@ -112,7 +123,9 @@ def get_spark(
         "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
         "spark.ui.showConsoleProgress": "false",
         "spark.ui.enabled": os.environ.get("SPARK_GRAFT_UI", "false"),
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.driver.memory": os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", default_driver_memory()
+        ),
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -45,14 +45,14 @@ def test_zip_contains_every_package_module():
 
 def test_zip_is_importable_as_sys_path_root():
     """A fresh interpreter with ONLY the zip on sys.path (plus stdlib /
-    site-packages for pyspark) must import the deep modules whose
-    closures ride to executors."""
+    site-packages for pyspark) must import the DAG's operator modules:
+    defrag's applyInPandas scan is a closure that rides to executors
+    and re-imports its module there."""
     zip_path = _build_package_zip()
     code = (
         "import sys; sys.path.insert(0, {z!r}); "
-        "import hpc_hd_textreuse_etl_spark.operators.skyline, "
-        "hpc_hd_textreuse_etl_spark.operators.defrag, "
-        "hpc_hd_textreuse_etl_spark.functions.png_codec; "
+        "import hpc_hd_textreuse_etl_spark.operators.defrag, "
+        "hpc_hd_textreuse_etl_spark.operators.clustering; "
         "print('ok')"
     ).format(z=zip_path)
     env = dict(os.environ)
