@@ -1,70 +1,166 @@
 """Chinese Whispers label propagation over a piece graph.
 
 Re-implementation of the reference's iterative clustering
-(``etl_textreuse/assets/chinese_label_propagation.py:32-200``) as a
-self-contained operator. Same algorithm:
+(``etl_textreuse/assets/chinese_label_propagation.py:32-200``). Same
+algorithm:
 
 - state per vertex: ``(piece_id, cluster_id, cluster_counts: map<long,long>,
-  active: bool)``; initially each vertex is its own cluster and sees one
-  vote per neighbor;
-- each iteration, active vertices pick the arg-max cluster from their
-  vote map with uniform tie-breaking (reservoir trick: accept a tied key
-  with probability ``1/(ties_seen+1)``), apply the change with
-  probability 0.9, then push ``-1``/``+1`` vote deltas to neighbors via
-  the adjacency list, folded into per-vertex delta maps and merged with
-  ``map_zip_with`` + ``map_filter`` (all Catalyst higher-order functions,
-  no UDFs);
-- convergence when no vertex is active, capped at ``max_iter``.
+  active, stale)``; initially each vertex is its own cluster and its vote
+  map holds one vote per neighbour occurrence (parallel edges count
+  twice);
+- each iteration, every active vertex picks the arg-max cluster of its
+  vote map with uniform tie-breaking (reservoir rule over the sorted
+  keys: the j-th tied key replaces the pick with probability ``1/j``)
+  and moves there with probability 0.9; a move sends ``-1``/``+1`` to
+  the old/new cluster's vote of every neighbour occurrence;
+- a vertex is active in the next iteration if a neighbour moved, or if
+  its pick was tied and its vote map has been unchanged for fewer than
+  ``tie_freeze`` iterations;
+- the loop stops once the active count is within ``min_active``, or at
+  ``max_iter``.
+
+How it runs. A vote never crosses a connected component, so the
+components are computed once (:func:`operators.graph.connected_components`),
+the adjacency is shuffled once by component (each component's rows
+adjacent in one partition) and pinned, and each component's whole loop
+runs in Python inside a ``mapInArrow`` task over its partition, so
+the number of Spark jobs does not grow with the iteration count (at
+benchmark size Spark's fixed per-job overhead, not the rows, is the
+cost). A ``groupBy("component").applyInPandas`` pass would do the same
+work but pay a pandas round trip per component: about 2 s more per pass
+over the 656 components of trbench's seed-3 graph on a 4-vCPU host. The
+vote map is not carried between iterations as data: it always equals
+the multiset of the neighbours' labels, so each task rebuilds it from
+the labels.
+
+The stop iteration ``T`` is global (the floor counts active vertices
+over the whole graph) while components run independently. So the
+pinned input is read twice: pass 1 returns every component's active
+count per iteration, summed per iteration on the cluster (a few rows
+reach the driver); the driver picks ``T`` exactly as an
+iteration-at-a-time loop would; pass 2 reruns every component to ``T``
+and writes its state.
 
 Deliberate improvements over the reference (its README documents the
 loop as unstable, ``assets/README.md:250-251``):
 
 - **Seeded determinism**: the reference uses ``rand()`` (re-evaluated,
-  partition-dependent). We derive every coin from
-  ``xxhash64(vertex, key, iteration, seed)`` and fold over
-  ``array_sort(map_keys(...))``, so the run is reproducible bit-for-bit
-  regardless of partitioning or retries.
-- **Lineage truncation** via ``localCheckpoint`` per iteration (or
-  parquet round-trip when a checkpoint dir is given — the durable,
-  resumable option matching the reference's alternating
-  ``clusters_counts_{0,1}`` tables).
+  partition-dependent). Every coin here is a hash of
+  ``(vertex, key, iteration, seed)``, so the run is reproducible
+  bit-for-bit regardless of partitioning or retries. The coins are those
+  of Spark SQL's ``pmod(xxhash64(...), 1e9) / 1e9`` (the trajectories
+  pinned in ``trbench/digests.json`` and the ``chinese_whispers_clusters``
+  golden hashes were taken with them) or, with
+  ``hash_family="portable"``, of the md5-based cross-engine hash that
+  DuckDB also computes.
+- **Resume**: the final state goes to ``{checkpoint}/clusters_counts_{T % 2}``
+  (partitioned by ``active``, the reference's table layout) and
+  ``{checkpoint}/clp_meta`` records ``T``; a later call with
+  ``resume=True`` continues from it.
 
-Scale notes: the big-side join per iteration is against the adjacency
-list; pass ``adjacency`` pre-bucketed by ``piece_id`` (see
-:func:`write_bucketed_adjacency`) to make it shuffle-free, exactly like
-the reference's 256-bucket layout. The delta fold is repartitioned on
-``piece_id`` before grouping (the reference scales 256 → 4096 partitions
-past 512M active vertices; we defer to AQE + an explicit knob).
+Limit: a component's adjacency must fit in one Python worker. The
+largest measured shape, one hub adjacent to half of a 20 000-vertex
+graph (``plans/r12/cw_hot_hub_probe.json``: hub degree 10 000, 1 771
+distinct clusters in its vote map), is far inside it; a corpus whose
+reuse graph has one giant component of hundreds of millions of edges is
+not.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import hashlib
+import tempfile
+from decimal import Decimal
+
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_COIN = "(pmod(xxhash64({args}), 1000000000) / 1000000000.0)"
+#: a coin is ``pmod(hash, 1e9)``, read as the fraction ``v / 1e9``
+_M = 1_000_000_000
+
+# XXH64 as Spark's ``xxhash64`` applies it (org.apache.spark.sql.catalyst
+# .expressions.XXH64): each argument is hashed with the previous hash as
+# its seed, starting from 42; longs by ``hashLong``, ints by ``hashInt``.
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
 
 
-def _coin(*args: str) -> str:
-    return _COIN.format(args=", ".join(args))
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
 
 
-def _coin_portable(*args: str) -> str:
-    """The same uniform coin over the md5-based portable 60-bit hash
-    (functions/hashing.py) of the '|'-joined string renderings — DuckDB
-    computes the identical value as
-    ``((('0x' || substr(md5(a || '|' || b ...), 1, 15))::BIGINT
-    % 1000000000) / 1000000000.0)``, which is what lets a
-    bounded-iteration CW run hash-match a SQL oracle
-    (plans/queries.py ``chinese_whispers_portable``). xxhash64 stays the
-    production family: one JVM intrinsic vs an md5 + string round-trip
-    per coin."""
-    joined = ", ".join(f"CAST({a} AS STRING)" for a in args)
-    return (
-        "(pmod(CAST(conv(substr(md5(concat_ws('|', "
-        f"{joined}"
-        ")), 1, 15), 16, 10) AS BIGINT), 1000000000) / 1000000000.0)"
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = h ^ (h >> np.uint64(33))
+    h = h * _P2
+    h = h ^ (h >> np.uint64(29))
+    h = h * _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def _xx_long(v: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    h = seed + _P5 + np.uint64(8)
+    h = h ^ (_rotl(v * _P2, 31) * _P1)
+    return _fmix(_rotl(h, 27) * _P1 + _P4)
+
+
+def _xx_int(v: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    h = seed + _P5 + np.uint64(4)
+    h = h ^ ((v & np.uint64(0xFFFFFFFF)) * _P1)
+    return _fmix(_rotl(h, 23) * _P2 + _P3)
+
+
+def coins_xxhash64(longs: list[np.ndarray], ints: tuple[int, ...]) -> np.ndarray:
+    """``pmod(xxhash64(*longs, *[int(i) for i in ints]), 1e9)`` row-wise,
+    as int64 in ``[0, 1e9)``."""
+    n = len(longs[0])
+    h = np.full(n, 42, dtype=np.uint64)
+    for a in longs:
+        h = _xx_long(np.asarray(a, dtype=np.int64).view(np.uint64), h)
+    for i in ints:
+        h = _xx_int(np.full(n, i & 0xFFFFFFFF, dtype=np.uint64), h)
+    return np.mod(h.view(np.int64), _M)
+
+
+def coins_portable(longs: list[np.ndarray], ints: tuple[int, ...]) -> np.ndarray:
+    """The md5-based portable 60-bit hash (functions/hashing.py) of the
+    '|'-joined decimal renderings, ``pmod(·, 1e9)``; DuckDB computes the
+    same value as ``('0x' || substr(md5(a || '|' || b ...), 1, 15))::BIGINT
+    % 1000000000``, which is what lets a bounded-iteration run hash-match
+    a SQL oracle (plans/queries.py ``chinese_whispers_portable``)."""
+    tail = "".join(f"|{i}" for i in ints)
+    return np.array(
+        [
+            int(hashlib.md5(("|".join(map(str, row)) + tail).encode()).hexdigest()[:15], 16) % _M
+            for row in zip(*(np.asarray(a, dtype=np.int64).tolist() for a in longs))
+        ],
+        dtype=np.int64,
     )
+
+
+def tie_accept_xxhash64(v: np.ndarray, j: np.ndarray) -> np.ndarray:
+    """``v / 1e9 < 1.0 / j`` as Spark SQL decides it for the xxhash64
+    family. ``j`` is a bigint there, so ``1.0 / j`` is a decimal(23,22)
+    rounded half-up; against a coin with 9 decimals that rounding never
+    decides, and the test is the exact rational one."""
+    return v * j < _M
+
+
+def tie_accept_portable(v: np.ndarray, j: np.ndarray) -> np.ndarray:
+    """``v / 1e9 < 1.0 / j`` in doubles: the portable family compares in
+    DOUBLE in both engines (a decimal ``1.0 / j`` disagrees with DuckDB's
+    double by one ulp for some j, e.g. 1923)."""
+    return v / 1e9 < 1.0 / j
+
+
+_FAMILIES = {
+    "xxhash64": (coins_xxhash64, tie_accept_xxhash64),
+    "portable": (coins_portable, tie_accept_portable),
+}
 
 
 def symmetrize_edges(edges: DataFrame, src: str = "piece1_id", dst: str = "piece2_id") -> DataFrame:
@@ -87,8 +183,8 @@ def write_bucketed_adjacency(
     spark: SparkSession, adj: DataFrame, table: str = "adjacency_list",
     buckets: int = 256, path: str | None = None,
 ) -> DataFrame:
-    """Persist the adjacency list bucketed+sorted by ``piece_id`` so every
-    per-iteration join co-locates without a shuffle (reference ``:45-50``)."""
+    """Persist the adjacency list bucketed+sorted by ``piece_id``, the
+    reference's 256-bucket table layout (reference ``:45-50``)."""
     writer = adj.write.bucketBy(buckets, "piece_id").sortBy("piece_id")
     if path:
         writer = writer.option("path", path)
@@ -96,27 +192,129 @@ def write_bucketed_adjacency(
     return spark.read.table(table)
 
 
+class _Component:
+    """One connected component's loop state, in Python.
+
+    Vertices are indexed ``0..n-1`` in input order; a neighbour id that
+    is not a vertex (only possible for a hand-built adjacency) keeps its
+    own id as its label and never moves.
+    """
+
+    def __init__(self, rows: pa.Table):
+        def column(name: str, dtype) -> np.ndarray:
+            return np.array(rows.column(name).to_numpy(), dtype=dtype)
+
+        self.ids = column("piece_id", np.int64)
+        self.labels = column("cluster_id", np.int64)
+        self.active = column("active", bool)
+        self.stale = column("stale", np.int64)
+        index = {p: i for i, p in enumerate(self.ids.tolist())}
+        n = len(self.ids)
+        neighbours = rows.column("other_piece_ids").to_pylist()
+        self.nbrs = [[index.get(o, -1) for o in row] for row in neighbours]
+        self.counts: list[dict[int, int]] = []
+        labels = self.labels.tolist()
+        for row, idx in zip(neighbours, self.nbrs):
+            c: dict[int, int] = {}
+            for o, j in zip(row, idx):
+                k = labels[j] if 0 <= j < n else int(o)
+                c[k] = c.get(k, 0) + 1
+            self.counts.append(c)
+
+    def step(self, it: int, seed: int, family: str, gate_max: int,
+             tie_freeze: int | None) -> None:
+        """One synchronous iteration number ``it``: every active vertex
+        picks from the vote maps as they stood at the start."""
+        coins, accept = _FAMILIES[family]
+        act = np.flatnonzero(self.active)
+        best = np.empty(len(act), dtype=np.int64)
+        tied = np.zeros(len(act), dtype=bool)
+        tie_at, tie_key, tie_rank = [], [], []
+        for a, i in enumerate(act.tolist()):
+            c = self.counts[i]
+            top = max(c.values())
+            keys = sorted(k for k, v in c.items() if v == top)
+            best[a] = keys[0]
+            if len(keys) > 1:
+                tied[a] = True
+                for j, k in enumerate(keys[1:], start=2):
+                    tie_at.append(a)
+                    tie_key.append(k)
+                    tie_rank.append(j)
+        if tie_at:
+            at = np.array(tie_at, dtype=np.int64)
+            key = np.array(tie_key, dtype=np.int64)
+            ok = accept(coins([self.ids[act[at]], key], (it, seed)),
+                        np.array(tie_rank, dtype=np.int64))
+            # the reservoir's last accepted key wins (entries are in key order)
+            for a, k in zip(at[ok].tolist(), key[ok].tolist()):
+                best[a] = k
+        old = self.labels[act]
+        move = (best != old) & (coins([self.ids[act]], (it, seed + 1)) <= gate_max)
+
+        n = len(self.ids)
+        received = np.zeros(n, dtype=bool)
+        for v, o, nw in zip(act[move].tolist(), old[move].tolist(), best[move].tolist()):
+            for j in self.nbrs[v]:
+                if 0 <= j < n:
+                    c = self.counts[j]
+                    left = c.get(o, 0) - 1
+                    if left:
+                        c[o] = left
+                    else:
+                        del c[o]
+                    c[nw] = c.get(nw, 0) + 1
+                    received[j] = True
+        self.labels[act[move]] = best[move]
+        self.stale = np.where(received, 0, self.stale + 1)
+        was_tied = np.zeros(n, dtype=bool)
+        was_tied[act] = tied
+        if tie_freeze is not None:
+            was_tied &= self.stale < tie_freeze
+        self.active = was_tied | received
+
+
+def _components(batches):
+    """Whole components, as tables, from the Arrow batches of a partition
+    whose rows are sorted by ``component`` (a component may span
+    batches)."""
+    carry: list[pa.RecordBatch] = []
+    carry_key = None
+    for batch in batches:
+        key = batch.column("component").to_numpy()
+        cuts = [0, *(np.flatnonzero(key[1:] != key[:-1]) + 1).tolist(), len(key)]
+        for a, b in zip(cuts[:-1], cuts[1:]):
+            if a == b:
+                continue
+            if carry and carry_key != key[a]:
+                yield pa.Table.from_batches(carry)
+                carry = []
+            carry_key = key[a]
+            carry.append(batch.slice(a, b - a))
+    if carry:
+        yield pa.Table.from_batches(carry)
+
+
 def chinese_whispers(
     adj: DataFrame,
     max_iter: int = 100,
     seed: int = 42,
     update_prob: float = 0.9,
-    repartition: int | None = None,
     checkpoint: str | None = None,
     resume: bool = False,
-    verbose: bool = False,
     tie_freeze: int | None = 5,
     min_active: int | float = 0,
-    materialize_adjacency: bool = True,
     hash_family: str = "xxhash64",
+    stats: dict | None = None,
 ) -> tuple[DataFrame, int]:
     """Run the loop; returns ``(state, iterations)`` where state has
     ``(piece_id, cluster_id, cluster_counts, active, stale)``.
 
-    ``adj`` must be an adjacency list (see :func:`adjacency_list`).
+    ``adj`` must be a symmetric adjacency list (see :func:`adjacency_list`).
+    A vertex with an empty neighbour list takes no part.
 
     ``resume=True`` with a durable ``checkpoint`` dir continues from the
-    last completed iteration (fixing the reference's hard-coded
+    iteration recorded there (fixing the reference's hard-coded
     ``iter=0`` + manual-resume procedure, chinese_label_propagation.py:77
     and assets/README.md:250-251). Coins are keyed on the absolute
     iteration number, so a resumed run follows the identical trajectory
@@ -125,261 +323,173 @@ def chinese_whispers(
     ``tie_freeze`` (round-8 convergence fix): in the reference, a vertex
     whose arg-max is TIED stays active forever — on tie-rich graphs the
     loop never converges and ``max_iter`` full iterations are always
-    paid (reference cap at chinese_label_propagation.py:105; measured in
-    the round-7 composed pipeline as CW consuming ~47% of total wall).
-    A tied vertex whose vote map has not changed for ``tie_freeze``
-    consecutive iterations is FROZEN: with a static map, its remaining
-    moves are a pure coin walk among equal-vote labels — zero
-    information, unbounded churn (each flip re-activates neighbors,
-    whose deltas can re-activate it, forever). Freezing keeps its
-    current label; any later vote-map change (a neighbor genuinely
-    moving) resets the staleness counter and re-activates it, so only
+    paid (reference cap at chinese_label_propagation.py:105). A tied
+    vertex whose vote map has not changed for ``tie_freeze`` consecutive
+    iterations is FROZEN: with a static map, its remaining moves are a
+    pure coin walk among equal-vote labels. Freezing keeps its current
+    label; any later vote-map change (a neighbour genuinely moving)
+    resets the staleness counter and re-activates it, so only
     provably-stagnant ties are cut. ``tie_freeze=None`` restores the
-    reference's never-converge behavior. Determinism is unchanged: the
-    trajectory is identical to the unfrozen run until the first freeze
-    triggers, and the freeze rule itself is deterministic.
+    reference's never-converge behaviour.
 
     ``min_active`` (activity floor, default 0 = exact convergence): stop
     once the active-vertex count is ≤ the floor (an absolute count, or a
     fraction of the vertex count when < 1). Mutually-adjacent tied
-    GROUPS keep exchanging deltas (each flip resets neighbors'
-    staleness), so tie-freeze turns their activity into geometric decay
-    rather than an instant cut — measured ~0.9×/iteration on the
-    composed-pipeline corpus — and the exact-zero tail can cost hundreds
-    of iterations for a vanishing fraction of vertices. The floor is the
-    principled terminator for that tail: deterministic (a pure function
-    of the deterministic trajectory), and bounded — at most
-    ``min_active`` vertices hold a label that one more coin flip might
-    still have changed.
+    GROUPS keep exchanging deltas, so tie-freeze turns their activity
+    into geometric decay (measured ~0.9×/iteration on the
+    composed-pipeline corpus) and the exact-zero tail can cost hundreds
+    of iterations for a vanishing fraction of vertices. The floor is
+    deterministic and bounded: at most ``min_active`` vertices hold a
+    label that one more coin flip might still have changed.
 
-    ``hash_family``: ``"xxhash64"`` (default, production) derives coins
-    from the JVM-side xxhash64; ``"portable"`` derives them from the
-    md5-based cross-engine hash (functions/hashing.py) so a
-    bounded-iteration run is reproducible bit-for-bit in DuckDB SQL —
-    the family that puts CW under the full value-hash oracle gate
-    (plans/queries.py ``chinese_whispers_portable``) instead of
-    rows-only. The two families follow different (equally valid)
-    trajectories; everything else about the loop is identical.
+    ``hash_family``: ``"xxhash64"`` (default, production) or
+    ``"portable"``, whose coins DuckDB SQL reproduces bit-for-bit (the
+    oracle-gated ``chinese_whispers_portable`` query). The two families
+    follow different, equally valid trajectories.
+
+    ``stats`` (optional out-dict) receives ``active_per_iter`` (the
+    active count after each iteration run by this call), ``components``
+    and ``largest_component`` (vertex count).
     """
-    if hash_family not in ("xxhash64", "portable"):
+    if hash_family not in _FAMILIES:
         raise ValueError(f"unknown hash_family {hash_family!r}")
-    coin = _coin if hash_family == "xxhash64" else _coin_portable
-    # The tie-break threshold 1/(ties+1): with "portable" it must be a
-    # DOUBLE division — Spark's bare `1.0/n` divides in decimal(13,12),
-    # whose rounding disagrees with DuckDB's double `1.0/n` by one ulp
-    # for some n (measured at n=1923), which would silently fork the
-    # cross-engine trajectory. The xxhash64 family keeps the original
-    # decimal form verbatim: its trajectories are golden-pinned
-    # (plans/queries.py chinese_whispers_clusters) and have no oracle to
-    # agree with.
-    one = "1.0" if hash_family == "xxhash64" else "CAST(1.0 AS DOUBLE)"
+    from hpc_hd_textreuse_etl_spark.catalog import delete_path, path_exists
+    from hpc_hd_textreuse_etl_spark.functions.checkpoints import (
+        release_checkpoint,
+        tracked_local_checkpoint,
+    )
+    from hpc_hd_textreuse_etl_spark.operators.graph import connected_components
+
     spark = adj.sparkSession
     if checkpoint is None:
-        # Durable per-iteration round-trip is mandatory: an in-memory
-        # localCheckpoint empirically fails to cut the *physical*
-        # recomputation chain (iteration time grows ~2.5× per step), the
-        # same instability that drove the reference to its alternating
-        # saveAsTable checkpoints.
-        import tempfile
-
         checkpoint = tempfile.mkdtemp(prefix="clp-checkpoint-")
-
-    from hpc_hd_textreuse_etl_spark.catalog import path_exists
-
-    if materialize_adjacency:
-        # The per-iteration ``changed.join(adj)`` is a SEPARATE Spark
-        # action each iteration, and Spark does not reuse shuffle output
-        # across actions — a lazy adjacency plan (explode + groupBy +
-        # collect_list over every edge) would be recomputed max_iter
-        # times. One durable snapshot makes each iteration's join read a
-        # plain parquet scan instead. Callers that pass an ALREADY
-        # materialized adjacency — a bucketed table from
-        # :func:`write_bucketed_adjacency` (whose bucket metadata a
-        # parquet round-trip would destroy, reintroducing the join
-        # shuffle) or a pre-persisted frame — should pass
-        # ``materialize_adjacency=False``.
-        adj_path = f"{checkpoint}/adjacency"
-        if not (resume and path_exists(spark, adj_path)):
-            adj.write.mode("overwrite").option("compression", "zstd").parquet(
-                adj_path
-            )
-        adj = spark.read.parquet(adj_path)
-
     meta_path = f"{checkpoint}/clp_meta"
-    it = 0
-    if resume and path_exists(spark, meta_path):
-        it = spark.read.parquet(meta_path).first()["iter"]
-        state = _read_checkpoint(spark, checkpoint, it)
-        active_count = state.filter("active").count()
-        total_count = state.count()
+    cc_path = f"{checkpoint}/cc"
+
+    adj = adj.filter(F.size("other_piece_ids") > 0)
+    components = connected_components(
+        adj.select("piece_id", F.explode("other_piece_ids").alias("other")),
+        src="piece_id", dst="other", checkpoint_dir=cc_path,
+    ).withColumnRenamed("node", "piece_id")
+    # a piece whose only edges are self-loops is in no component's edge
+    # set: it is its own component (what ``nodes=`` would add, without
+    # that option's extra distinct and join)
+    grouped = adj.join(components, "piece_id", "left").withColumn(
+        "component", F.coalesce("component", "piece_id")
+    )
+    it0 = 0
+    resumed = resume and path_exists(spark, meta_path)
+    if resumed:
+        it0 = spark.read.schema("iter int").parquet(meta_path).first()["iter"]
+        state = _read_checkpoint(spark, checkpoint, it0)
+        grouped = grouped.join(
+            state.select("piece_id", "cluster_id", "active", "stale"), "piece_id"
+        )
     else:
-        # Initial votes: one per neighbor occurrence. Parallel edges (a
-        # pair surviving defrag in both directions) are summed into one
-        # map entry — map_from_entries would reject the duplicate key.
-        state = (
-            adj.select("piece_id", F.explode("other_piece_ids").alias("o"))
-            .groupBy("piece_id", "o")
-            .agg(F.count(F.lit(1)).cast("long").alias("votes"))
-            .groupBy("piece_id")
-            .agg(
-                F.map_from_entries(
-                    F.collect_list(F.struct(F.col("o"), F.col("votes")))
-                ).alias("cluster_counts")
-            )
-            .withColumn("cluster_id", F.col("piece_id"))
-            .withColumn("active", F.lit(True))
-            .withColumn("stale", F.lit(0))
-            .select("piece_id", "cluster_id", "cluster_counts", "active", "stale")
+        grouped = grouped.select(
+            "*",
+            F.col("piece_id").alias("cluster_id"),
+            F.lit(True).alias("active"),
+            F.lit(0).alias("stale"),
         )
-        state, active_count, total_count = _truncate_lineage(
-            spark, state, checkpoint, 0
-        )
+    # one shuffle puts every component in one partition, rows of a
+    # component adjacent; pinned by pass 1's job and read from there by
+    # pass 2, which may overwrite the slot a resumed state came from
+    grouped = tracked_local_checkpoint(
+        grouped.repartition("component").sortWithinPartitions("component"),
+        eager=False,
+    )
+    gate_max = int(Decimal(repr(update_prob)) * _M)
+
+    def run(rows: pa.Table, stop: int) -> tuple[_Component, list[int]]:
+        # the active count at it0 and after each iteration run
+        comp = _Component(rows)
+        history = [int(comp.active.sum())]
+        it = it0
+        while it < stop and comp.active.any():
+            comp.step(it, seed, hash_family, gate_max, tie_freeze)
+            it += 1
+            history.append(int(comp.active.sum()))
+        return comp, history
+
+    def activity(batches):
+        # one row per partition: active count at it0, it0 + 1, ... summed
+        # over its components, and the components' sizes
+        active = np.zeros(max(max_iter - it0, 0) + 1, dtype=np.int64)
+        sizes = []
+        for rows in _components(batches):
+            _, history = run(rows, max_iter)
+            active[:len(history)] += history
+            sizes.append(rows.num_rows)
+        if sizes:
+            yield pa.RecordBatch.from_pydict({
+                "active": [active.tolist()],
+                "vertices": [sum(sizes)],
+                "largest": [max(sizes)],
+                "components": [len(sizes)],
+            })
+
+    parts = grouped.mapInArrow(
+        activity, schema="active array<long>, vertices long, largest long, components long"
+    ).collect()
+    active_at = np.sum([r["active"] for r in parts], axis=0, dtype=np.int64) if parts else [0]
     floor = min_active
     if isinstance(min_active, float) and 0 < min_active < 1:
-        floor = int(min_active * total_count)
-    while active_count > floor and it < max_iter:
-        # 1. arg-max vote with deterministic reservoir tie-breaking.
-        # Fold over sorted keys so the outcome is partition-independent.
-        # The tie-branch divisor is clamped with greatest(...,1): in any
-        # consistent state the branch is only reachable on a vote tie
-        # with same_count >= 1, but if vote bookkeeping ever desyncs
-        # from the adjacency (seen in round 7's composed-pipeline lazy
-        # plan, where a job-unstable upstream recomputed different
-        # vertex ids per iteration — functions/ids.py zip_with_index,
-        # since fixed), negative vote entries can tie with the initial
-        # accumulator's same_count = -1 and the raw division throws
-        # DIVIDE_BY_ZERO under ANSI. Total expressions keep a
-        # bookkeeping anomaly diagnosable instead of fatal mid-fold.
-        pick = f"""
-        aggregate(
-          array_sort(map_keys(cluster_counts)),
-          (bigint(-1) as cluster_id, bigint(-1) as count, bigint(-1) as same_count),
-          (acc, y) ->
-            IF(acc.count <= cluster_counts[y],
-              IF(acc.count < cluster_counts[y],
-                (y as cluster_id, cluster_counts[y] as count, 1 as same_count),
-                IF({coin("piece_id", "y", f"int({it})", f"int({seed})")} < {one}/greatest(acc.same_count + 1, 1),
-                  (y as cluster_id, acc.count as count, acc.same_count + 1 as same_count),
-                  (acc.cluster_id as cluster_id, acc.count as count, acc.same_count + 1 as same_count))),
-              acc),
-          acc -> (acc.cluster_id as cluster_id, acc.same_count > 1 as tied)
-        )
-        """
-        gate = f"{coin('piece_id', f'int({it})', f'int({seed + 1})')} <= {update_prob}"
-        updates = (
-            state.filter(F.col("active"))
-            .select("piece_id", F.col("cluster_id").alias("old_cluster_id"), "cluster_counts")
-            .withColumn("picked", F.expr(pick))
+        floor = int(min_active * sum(r["vertices"] for r in parts))
+    stop, active_count, active_per_iter = it0, int(active_at[0]), []
+    while active_count > floor and stop < max_iter:
+        stop += 1
+        active_count = int(active_at[stop - it0])
+        active_per_iter.append(active_count)
+    if stats is not None:
+        stats["active_per_iter"] = active_per_iter
+        stats["components"] = sum(r["components"] for r in parts)
+        stats["largest_component"] = max((r["largest"] for r in parts), default=0)
+
+    if not (resumed and stop == it0):
+        def final(batches):
+            done = []
+            for rows in _components(batches):
+                comp, history = run(rows, stop)
+                # a converged component only ages: staleness grows to T
+                comp.stale += stop - it0 - (len(history) - 1)
+                done.append(comp)
+            if done:
+                counts = [sorted(c.items()) for comp in done for c in comp.counts]
+                longs = pa.list_(pa.int64())
+                yield pa.RecordBatch.from_pydict({
+                    "piece_id": np.concatenate([c.ids for c in done]),
+                    "cluster_id": np.concatenate([c.labels for c in done]),
+                    "keys": pa.array([[k for k, _ in c] for c in counts], longs),
+                    "votes": pa.array([[v for _, v in c] for c in counts], longs),
+                    "active": np.concatenate([c.active for c in done]),
+                    "stale": np.concatenate([c.stale for c in done]).astype(np.int32),
+                })
+
+        # clp_meta is the commit marker: a crash before it is rewritten
+        # restarts from iteration 0 instead of reading a half-written slot
+        delete_path(spark, meta_path)
+        (
+            grouped.mapInArrow(
+                final,
+                schema="piece_id long, cluster_id long, keys array<long>, "
+                "votes array<long>, active boolean, stale int",
+            )
             .select(
-                "piece_id",
-                "old_cluster_id",
-                F.col("picked.cluster_id").alias("new_cluster_id"),
-                F.col("picked.tied").alias("tied"),
+                "piece_id", "cluster_id",
+                F.map_from_arrays("keys", "votes").alias("cluster_counts"),
+                "active", "stale",
             )
-            .withColumn(
-                "do_update",
-                (F.col("old_cluster_id") != F.col("new_cluster_id")) & F.expr(gate),
-            )
-            .filter(F.col("tied") | F.col("do_update"))
-            .persist()
+            .write.mode("overwrite").option("compression", "zstd")
+            .partitionBy("active").parquet(f"{checkpoint}/clusters_counts_{stop % 2}")
         )
-
-        # 2. push ±count deltas to all neighbors of changed vertices
-        changed = updates.filter(F.col("do_update")).join(adj, "piece_id")
-        exploded = changed.select(
-            F.explode("other_piece_ids").alias("piece_id"),
-            "old_cluster_id",
-            "new_cluster_id",
-        )
-        if repartition:
-            exploded = exploded.repartition(repartition, "piece_id")
-        deltas = (
-            exploded.groupBy("piece_id", "old_cluster_id", "new_cluster_id")
-            .count()
-            .groupBy("piece_id")
-            .agg(
-                F.expr(
-                    """
-            aggregate(
-              collect_list(struct(old_cluster_id, new_cluster_id, count)),
-              cast(map() AS MAP<BIGINT, BIGINT>),
-              (acc, u) -> map_concat(
-                map(u.old_cluster_id, coalesce(acc[u.old_cluster_id], 0) - u.count,
-                    u.new_cluster_id, coalesce(acc[u.new_cluster_id], 0) + u.count),
-                map_filter(acc, (k, v) -> k != u.old_cluster_id and k != u.new_cluster_id))
-            )
-            """
-                ).alias("count_updates")
-            )
-        )
-
-        # 3. merge deltas + recompute active. The two per-vertex event
-        # streams (an active vertex's own pick, the deltas its neighbors
-        # pushed) are both active-proportional while the state is
-        # corpus-proportional — pre-merging them costs one SMALL outer
-        # join but halves the number of big-side joins per iteration
-        # (one shuffle/broadcast of the full state instead of two).
-        events = updates.select(
-            "piece_id", "do_update", "new_cluster_id", "tied"
-        ).join(deltas, "piece_id", "full")
-        state = (
-            state.join(events, "piece_id", "left")
-            .withColumn(
-                "cluster_id",
-                F.when(F.col("do_update") == True, F.col("new_cluster_id")).otherwise(  # noqa: E712
-                    F.col("cluster_id")
-                ),
-            )
-            .withColumn(
-                "cluster_counts",
-                F.expr(
-                    """
-          IF(isnull(count_updates), cluster_counts,
-            map_filter(
-              map_zip_with(cluster_counts, count_updates, (k, v1, v2) -> coalesce(v1, 0) + coalesce(v2, 0)),
-              (k, v) -> v != 0))
-          """
-                ),
-            )
-            .withColumn(
-                "stale",
-                # consecutive iterations with NO vote-map change; any
-                # arriving delta resets it (and re-activates, below)
-                F.when(F.col("count_updates").isNotNull(), F.lit(0)).otherwise(
-                    F.col("stale") + 1
-                ),
-            )
-            .withColumn(
-                "active",
-                (
-                    F.coalesce(F.col("tied"), F.lit(False))
-                    & (
-                        F.lit(True)
-                        if tie_freeze is None
-                        else F.col("stale") < F.lit(tie_freeze)
-                    )
-                )
-                | F.col("count_updates").isNotNull(),
-            )
-            .select("piece_id", "cluster_id", "cluster_counts", "active", "stale")
-        )
-        it += 1
-        state, active_count, total_count = _truncate_lineage(
-            spark, state, checkpoint, it
-        )
-        spark.createDataFrame([(it,)], "iter int").write.mode("overwrite").parquet(
-            meta_path
-        )
-        updates.unpersist()
-        if verbose:
-            import time
-
-            plan_len = len(state._jdf.queryExecution().optimizedPlan().toString())
-            print(
-                f"iter={it} active={active_count} plan_chars={plan_len} t={time.time():.1f}",
-                flush=True,
-            )
-    return state, it
+        spark.range(0, 1, 1, 1).select(F.lit(stop).alias("iter")).write.mode(
+            "overwrite"
+        ).parquet(meta_path)
+        state = _read_checkpoint(spark, checkpoint, stop)
+    release_checkpoint(grouped)
+    delete_path(spark, cc_path)
+    return state, stop
 
 
 def clustered_pieces(state: DataFrame) -> DataFrame:
@@ -388,45 +498,15 @@ def clustered_pieces(state: DataFrame) -> DataFrame:
     return state.select("piece_id", "cluster_id")
 
 
-def _truncate_lineage(
-    spark: SparkSession, df: DataFrame, checkpoint: str, it: int
-) -> tuple[DataFrame, int, int]:
-    """Stop the iterative plan (and physical recomputation chain) from
-    growing: parquet round-trip on alternating paths, the durable /
-    resumable pattern of the reference (``:189-197``).
-
-    Returns ``(reread_state, active_count, total_count)``. The counts
-    ride along on the write job via ``observe`` — the loop's convergence
-    check needs them every iteration, and a separate
-    ``filter("active").count()`` would schedule one extra job per
-    iteration re-reading the parquet just written.
-    """
-    path = f"{checkpoint}/clusters_counts_{it % 2}"
-    obs = Observation()
-    df = df.observe(
-        obs,
-        F.sum(F.col("active").cast("long")).alias("active"),
-        F.count(F.lit(1)).alias("rows"),
-    )
-    df.write.mode("overwrite").option("compression", "zstd").partitionBy(
-        "active"
-    ).parquet(path)
-    got = obs.get
-    return (
-        _read_checkpoint(spark, checkpoint, it),
-        int(got["active"] or 0),
-        int(got["rows"]),
-    )
-
-
 def _read_checkpoint(spark: SparkSession, checkpoint: str, it: int) -> DataFrame:
-    # partition columns come back as strings; restore the boolean
-    df = spark.read.parquet(f"{checkpoint}/clusters_counts_{it % 2}").withColumn(
-        "active", F.col("active") == "true"
+    # an explicit schema spares the inference job; a checkpoint from
+    # before tie-freeze has no staleness column and starts counting at
+    # zero (delays freezes, never forces one early)
+    return (
+        spark.read.schema(
+            "piece_id long, cluster_id long, cluster_counts map<bigint,bigint>, "
+            "stale int, active boolean"  # active: the partition column
+        )
+        .parquet(f"{checkpoint}/clusters_counts_{it % 2}")
+        .withColumn("stale", F.coalesce("stale", F.lit(0)))
     )
-    if "stale" not in df.columns:
-        # resume from a pre-round-8 checkpoint (no staleness column):
-        # start counting from zero — conservative (delays freezes, never
-        # forces one early)
-        df = df.withColumn("stale", F.lit(0))
-    return df

@@ -21,8 +21,7 @@ shuffle-bounded formulation for Spark scale:
   reference's scale converges in ~10 rounds, each a bounded shuffle, vs
   the unbounded frontier growth of naive label flooding;
 - per-round parquet round-trips on alternating paths stop physical
-  recomputation growth (same pattern as the CW loop; see
-  clustering._truncate_lineage — ``localCheckpoint`` does NOT bound the
+  recomputation growth (``localCheckpoint`` does NOT bound the
   recompute chain).
 """
 
@@ -146,8 +145,7 @@ def _truncate(
     spark: SparkSession, e: DataFrame, checkpoint: str, it: int
 ) -> tuple[DataFrame, tuple[int, int]]:
     """Parquet round-trip + convergence checksum in ONE job: the
-    checksum rides the write via ``observe`` (the clustering
-    ``_truncate_lineage`` pattern) — a separate ``agg().collect()``
+    checksum rides the write via ``observe`` — a separate ``agg().collect()``
     re-read the parquet just written, one extra job per CC round
     (guide §4.3 driver round trips)."""
     from pyspark.sql import Observation
@@ -158,7 +156,8 @@ def _truncate(
         "compression", "zstd"
     ).parquet(path)
     got = obs.get
-    return spark.read.parquet(path), (int(got["n"]), int(got["h"] or 0))
+    # the known schema spares a footer-reading inference job per round
+    return spark.read.schema(e.schema).parquet(path), (int(got["n"]), int(got["h"] or 0))
 
 
 def pagerank_scaled(

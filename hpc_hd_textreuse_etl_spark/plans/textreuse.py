@@ -308,14 +308,16 @@ def cluster_pieces(
 ) -> DataFrame:
     """``stats`` (optional out-param) records ``iterations`` and
     ``converged`` so composed-pipeline harnesses can report whether the
-    CW loop terminated by convergence or by cap. ``tie_freeze`` /
-    ``min_active`` pass through to :func:`chinese_whispers` — the
-    convergence knobs (tie-cycle freeze, activity floor) production
-    callers need on tie-rich corpora."""
+    CW loop terminated by convergence or by cap, plus the loop's
+    ``active_per_iter``, ``components`` and ``largest_component`` (see
+    :func:`chinese_whispers`). ``tie_freeze`` / ``min_active`` pass
+    through to :func:`chinese_whispers` — the convergence knobs
+    (tie-cycle freeze, activity floor) production callers need on
+    tie-rich corpora."""
     adj = C.adjacency_list(defrag_textreuses)
     state, iters = C.chinese_whispers(
         adj, max_iter=max_iter, seed=seed,
-        tie_freeze=tie_freeze, min_active=min_active,
+        tie_freeze=tie_freeze, min_active=min_active, stats=stats,
     )
     if stats is not None:
         stats["iterations"] = iters
