@@ -18,9 +18,17 @@ released checkpoint fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``
 (lineage is truncated, so Spark cannot silently recompute a DIFFERENT
 labeling — the failure mode id assignment requires), never a silent
 wrong answer.
+
+The parquet checkpoints that iterative operators write when the caller
+gives no directory go to :func:`session_temp_dir`: a driver-local temp
+dir that lives until the interpreter exits.
 """
 
 from __future__ import annotations
+
+import atexit
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame
 
@@ -74,3 +82,12 @@ def release_local_checkpoints(blocking: bool = False) -> int:
             pass  # session stopped / blocks already gone — nothing to free
     _LIVE.clear()
     return released
+
+
+def session_temp_dir(prefix: str) -> str:
+    """A fresh ``tempfile.mkdtemp(prefix=prefix)`` dir, removed when the
+    interpreter exits. Not removed earlier: the DataFrames an operator
+    returns read their checkpoint files lazily, after it has returned."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path

@@ -69,7 +69,6 @@ not.
 from __future__ import annotations
 
 import hashlib
-import tempfile
 from decimal import Decimal
 
 import numpy as np
@@ -177,19 +176,6 @@ def adjacency_list(edges: DataFrame, src: str = "piece1_id", dst: str = "piece2_
         .groupBy("piece_id")
         .agg(F.collect_list("other_piece_id").alias("other_piece_ids"))
     )
-
-
-def write_bucketed_adjacency(
-    spark: SparkSession, adj: DataFrame, table: str = "adjacency_list",
-    buckets: int = 256, path: str | None = None,
-) -> DataFrame:
-    """Persist the adjacency list bucketed+sorted by ``piece_id``, the
-    reference's 256-bucket table layout (reference ``:45-50``)."""
-    writer = adj.write.bucketBy(buckets, "piece_id").sortBy("piece_id")
-    if path:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table, mode="overwrite", format="parquet", compression="zstd")
-    return spark.read.table(table)
 
 
 class _Component:
@@ -318,7 +304,9 @@ def chinese_whispers(
     ``iter=0`` + manual-resume procedure, chinese_label_propagation.py:77
     and assets/README.md:250-251). Coins are keyed on the absolute
     iteration number, so a resumed run follows the identical trajectory
-    an uninterrupted run would have taken.
+    an uninterrupted run would have taken. Without ``checkpoint`` the
+    state goes to a ``clp-checkpoint-*`` temp dir that is removed when
+    the interpreter exits.
 
     ``tie_freeze`` (round-8 convergence fix): in the reference, a vertex
     whose arg-max is TIED stays active forever — on tie-rich graphs the
@@ -356,13 +344,14 @@ def chinese_whispers(
     from hpc_hd_textreuse_etl_spark.catalog import delete_path, path_exists
     from hpc_hd_textreuse_etl_spark.functions.checkpoints import (
         release_checkpoint,
+        session_temp_dir,
         tracked_local_checkpoint,
     )
     from hpc_hd_textreuse_etl_spark.operators.graph import connected_components
 
     spark = adj.sparkSession
     if checkpoint is None:
-        checkpoint = tempfile.mkdtemp(prefix="clp-checkpoint-")
+        checkpoint = session_temp_dir("clp-checkpoint-")
     meta_path = f"{checkpoint}/clp_meta"
     cc_path = f"{checkpoint}/cc"
 

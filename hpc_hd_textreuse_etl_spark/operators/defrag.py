@@ -5,12 +5,11 @@ out-of-process notebook (``etl_textreuse/assets/piece_id_mappings.ipynb``
 cells 2-6, orchestrated by ``assets/defragmentation.py:14-35``). The
 aggregate is order-dependent with a buffer-pruning sequential pass and a
 ``merge`` that deliberately throws — i.e. it is NOT a parallel aggregate
-and cannot be expressed with built-in window functions. The idiomatic
-PySpark form is an ``applyInPandas`` ordered scan per document: documents
-are independent, so the operator parallelizes across ``trs_id`` while the
-scan inside a group stays sequential (exactly the semantics the window
-frame ``PARTITION BY trs_id ORDER BY trs_start, piece_id ROWS UNBOUNDED
-PRECEDING`` gave the reference).
+and cannot be expressed with built-in window functions. Here the scan is
+restated as a bounded self-range-join with an argmin
+(:func:`raw_mappings_join`), pure Catalyst with no Python worker; the
+sequential scan itself survives as :func:`defrag_scan_group`, the
+pure-Python reference the tests check the join against.
 
 Semantics replicated exactly (``piece_id_mappings.ipynb`` cell 2):
 
@@ -23,15 +22,13 @@ Semantics replicated exactly (``piece_id_mappings.ipynb`` cell 2):
   ``|r.end - end|`` ≤ ``min(max(min(len, r_len) // 4, 10), 180)``
   (integer division, lengths are ``end - start``).
 
-Scale notes: one shuffle on ``trs_id``; per-group state is O(buffer) ≪
-group size. Arrow batches move each group to Python once — this is the
-engine's only Python hot path besides multimodal decode, matching the
-reference's single-UDAF budget (SURVEY §2.12).
+Scale notes: the join is keyed on ``(trs_id, start // 180)``, so its
+fan-out is the pieces within one 180-char window and one huge document
+spreads over many tasks.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -46,8 +43,8 @@ def defrag_scan_group(starts, ends, piece_ids) -> list:
     """Sequential defrag scan over one document's pieces, already sorted
     by (start, piece_id). Returns the target piece id for each input.
 
-    Pure-Python core, shared by the Spark operator and the brute-force
-    property tests.
+    Pure-Python reference for the Spark operator, itself checked against
+    a brute-force restatement in the property tests.
     """
     buf: list[tuple[int, int, int]] = []  # (start, end, piece_id)
     out = []
@@ -76,20 +73,11 @@ def piece_id_mappings(
     start_col: str = "trs_start",
     end_col: str = "trs_end",
     piece_col: str = "piece_id",
-    strategy: str = "join",
 ) -> DataFrame:
     """``orig_piece_id -> defrag_piece_id`` mapping with dense renumbered
-    targets (reference: ipynb cells 4-6).
-
-    ``strategy='join'`` (default) uses the JVM-only range-join
-    formulation (:func:`raw_mappings_join`); ``'scan'`` uses the
-    applyInPandas sequential scan (:func:`raw_mappings_scan`). Both are
-    property-tested equal; the join path is the 100 TB default."""
-    raw = (
-        raw_mappings_join(pieces, doc_col, start_col, end_col, piece_col)
-        if strategy == "join"
-        else raw_mappings_scan(pieces, doc_col, start_col, end_col, piece_col)
-    )
+    targets (reference: ipynb cells 4-6), raw targets from
+    :func:`raw_mappings_join`."""
+    raw = raw_mappings_join(pieces, doc_col, start_col, end_col, piece_col)
     # the renumber consumes raw three times (distinct targets, the two
     # zip_with_index passes, final join) — persist it; at production
     # scale materialize it to parquet instead (the reference snapshots
@@ -188,30 +176,6 @@ def raw_mappings_join(
     return cand.groupBy("p_a").agg(
         F.min_by("p_b", F.struct("s_b", "p_b")).alias("defrag_mapping")
     ).withColumnRenamed("p_a", "orig_piece_id")
-
-
-def raw_mappings_scan(
-    pieces: DataFrame,
-    doc_col: str = "trs_id",
-    start_col: str = "trs_start",
-    end_col: str = "trs_end",
-    piece_col: str = "piece_id",
-) -> DataFrame:
-    """Defrag mapping via the applyInPandas ordered scan (direct
-    restatement of the reference UDAF; one sequential pass per doc)."""
-
-    def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([start_col, piece_col], kind="mergesort")
-        mapping = defrag_scan_group(
-            pdf[start_col].tolist(), pdf[end_col].tolist(), pdf[piece_col].tolist()
-        )
-        return pd.DataFrame(
-            {"orig_piece_id": pdf[piece_col].values, "defrag_mapping": mapping}
-        )
-
-    return pieces.select(doc_col, start_col, end_col, piece_col).groupBy(doc_col).applyInPandas(
-        scan, schema="orig_piece_id long, defrag_mapping long"
-    )
 
 
 def defrag_pieces(orig_pieces: DataFrame, mappings: DataFrame) -> DataFrame:

@@ -27,10 +27,10 @@ shuffle-bounded formulation for Spark scale:
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from hpc_hd_textreuse_etl_spark.functions.checkpoints import session_temp_dir
 
 
 def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -98,11 +98,11 @@ def connected_components(
 
     ``checkpoint_dir`` must be a path visible to every executor (HDFS /
     object store) — the per-iteration parquet round-trip is the lineage
-    cut that keeps plans flat. The ``tempfile.mkdtemp`` default is a
-    DRIVER-LOCAL path, valid only on ``local[*]`` masters where driver
-    and executors share a filesystem; on a cluster each executor would
-    write to its own disk and the read-back would lose partitions, so it
-    is refused there. Falls back to ``spark.sparkContext.getCheckpointDir``
+    cut that keeps plans flat. The default, a :func:`session_temp_dir`
+    removed at interpreter exit, is a DRIVER-LOCAL path, valid only on
+    ``local[*]`` masters where driver and executors share a filesystem;
+    on a cluster each executor would write to its own disk and the
+    read-back would lose partitions, so it is refused there. Falls back to ``spark.sparkContext.getCheckpointDir``
     (shared by contract) when one is set.
     """
     spark = edges.sparkSession
@@ -118,7 +118,7 @@ def connected_components(
                 "at shared storage; a driver-local temp dir is not visible "
                 f"to executors (master={master!r})"
             )
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="cc_ckpt_")
+    checkpoint = checkpoint_dir or session_temp_dir("cc_ckpt_")
     e = _canonical(edges, src, dst)
     prev = None
     for it in range(max_iter):

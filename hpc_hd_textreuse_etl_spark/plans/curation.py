@@ -53,20 +53,6 @@ class CurationConfig:
     #: "xxhash64" in production; "portable" puts the minhash and
     #: decontamination stages under the DuckDB value-hash gate.
     hash_family: str = "xxhash64"
-    #: opt-in DSIR selection stage (None = off, the classic 5-stage
-    #: chain): keep this many documents, drawn ∝ importance weight
-    #: against the target defined by ``curate(dsir_target_predicate=)``.
-    dsir_keep: int | None = None
-    dsir_num_buckets: int = 512
-    dsir_salt: str = "dsir-select-v1"
-    #: opt-in discriminative quality-filter stage (None = off): train a
-    #: hashed-feature NB classifier on the labels from
-    #: ``curate(classifier_label_predicate=)`` and keep the
-    #: ``classifier_keep`` highest-scoring survivors (the CCNet/GPT-3
-    #: quality-filter step; operators/classifier.py).
-    classifier_keep: int | None = None
-    classifier_num_buckets: int = 512
-    classifier_alpha: float = 1.0
 
 
 def quality_gate(docs: DataFrame, text_col: str, cfg: CurationConfig) -> DataFrame:
@@ -98,28 +84,9 @@ def curate(
     text_col: str = "text",
     cfg: CurationConfig = CurationConfig(),
     checkpoint_dir: str | None = None,
-    dsir_target_predicate=None,
-    classifier_label_predicate=None,
 ) -> DataFrame:
     """The full curation chain; returns ``(id, split)`` for every
-    surviving document ('train' / 'test', disjoint by the hash gate).
-
-    With ``cfg.dsir_keep`` set, a DSIR selection stage runs between
-    decontamination and the split: survivors are scored against the
-    target slice ``clean.filter(dsir_target_predicate)`` (hashed-bigram
-    importance weights, operators/dsir.py) and ``dsir_keep`` of them
-    are drawn via the deterministic log-domain Gumbel top-k — the
-    "keep the most target-like N documents" step a token-budgeted
-    training run performs after cleaning. Gated end-to-end by the
-    ``curated_corpus_dsir`` contract query.
-
-    With ``cfg.classifier_keep`` set, the discriminative quality-filter
-    stage runs in the same slot (after DSIR when both are on): an NB
-    quality classifier (operators/classifier.py) trains on the
-    survivors labeled by ``classifier_label_predicate`` (true =
-    curated-like) and the ``classifier_keep`` highest log-odds
-    survivors are kept (deterministic — id tiebreak). Gated end-to-end
-    by the ``curated_corpus_classifier`` contract query."""
+    surviving document ('train' / 'test', disjoint by the hash gate)."""
     from hpc_hd_textreuse_etl_spark.functions.checkpoints import (
         tracked_local_checkpoint,
     )
@@ -128,14 +95,12 @@ def curate(
     e = exact_dedup_keepers(q, id_col, text_col)
     # Pin the post-exact-dedup survivors ONCE: every stage below reads
     # them — minhash shingling, the connected-components loop's pair
-    # derivation, the near-dup semi-join, decontamination grams, and
-    # the opt-in selection stages. Without the pin each consumer
-    # re-runs the scan + quality gate + dedup chain from the source
-    # (measured 104 s vs ~35 s for the composed DSIR chain at sf0.01),
-    # and at corpus scale that is N full passes over document bodies
-    # instead of one materialization (the reference's per-asset
-    # snapshot pattern, done engine-side). Tracked — released at the
-    # registry hygiene point.
+    # derivation, the near-dup semi-join and decontamination grams.
+    # Without the pin each consumer re-runs the scan + quality gate +
+    # dedup chain from the source, and at corpus scale that is N full
+    # passes over document bodies instead of one materialization (the
+    # reference's per-asset snapshot pattern, done engine-side).
+    # Tracked — released at the registry hygiene point.
     e = tracked_local_checkpoint(e)
     pairs = minhash_near_duplicates(
         e, id_col, text_col,
@@ -153,64 +118,6 @@ def curate(
         hash_family=cfg.hash_family
         if cfg.hash_family in ("xxhash64", "portable") else "xxhash64",
     )
-    if cfg.dsir_keep is not None:
-        if dsir_target_predicate is None:
-            raise ValueError(
-                "cfg.dsir_keep is set but no dsir_target_predicate given"
-            )
-        from hpc_hd_textreuse_etl_spark.functions.checkpoints import (
-            tracked_local_checkpoint,
-        )
-        from hpc_hd_textreuse_etl_spark.operators.dsir import dsir_log_weights
-        from hpc_hd_textreuse_etl_spark.operators.sampling import (
-            gumbel_topk_sample,
-        )
-
-        # the DSIR stage consumes the survivors four ways (feature
-        # counts, target slice, coverage join, final semi-join); pin
-        # the expensive upstream chain once instead of re-running the
-        # minhash resolution per consumer (tracked — released at the
-        # registry hygiene point)
-        clean = tracked_local_checkpoint(clean)
-        w = dsir_log_weights(
-            clean, clean.filter(dsir_target_predicate), id_col, text_col,
-            num_buckets=cfg.dsir_num_buckets, hash_family=cfg.hash_family,
-        )
-        kept = gumbel_topk_sample(
-            w, [id_col], "log_weight", cfg.dsir_keep, salt=cfg.dsir_salt
-        ).select(id_col)
-        clean = clean.join(kept, id_col, "left_semi")
-    if cfg.classifier_keep is not None:
-        if classifier_label_predicate is None:
-            raise ValueError(
-                "cfg.classifier_keep is set but no "
-                "classifier_label_predicate given"
-            )
-        from hpc_hd_textreuse_etl_spark.functions.checkpoints import (
-            tracked_local_checkpoint,
-        )
-        from hpc_hd_textreuse_etl_spark.operators.classifier import (
-            nb_quality_scores,
-        )
-
-        # same multi-consumer shape as the DSIR stage: the survivor
-        # chain feeds training labels, scoring features, and the final
-        # semi-join — pin once (tracked, released at the hygiene point)
-        clean = tracked_local_checkpoint(clean)
-        scored = nb_quality_scores(
-            clean,
-            clean.withColumn("__lab", classifier_label_predicate),
-            id_col, text_col, "__lab",
-            num_buckets=cfg.classifier_num_buckets,
-            alpha=cfg.classifier_alpha,
-            hash_family=cfg.hash_family,
-        )
-        top = (
-            scored.orderBy(F.desc("log_odds"), F.asc(id_col))
-            .limit(cfg.classifier_keep)
-            .select(id_col)
-        )
-        clean = clean.join(top, id_col, "left_semi")
     return train_test_split(
         clean, [id_col], cfg.test_fraction, salt=cfg.split_salt
     ).select(id_col, "split")

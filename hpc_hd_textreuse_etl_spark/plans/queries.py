@@ -1198,8 +1198,8 @@ def defrag_piece_mappings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered per-document defrag scan (the reference's only UDAF,
     piece_id_mappings.ipynb cell 2). The range-join reformulation
     (operators/defrag.py) is SQL-expressible, so the driver gets a FULL
-    oracle for it — the sequential-scan strategy is property-tested
-    equal in tests/test_defrag.py."""
+    oracle for it; tests/test_defrag.py also checks it against the
+    pure-Python sequential scan (``defrag_scan_group``)."""
     from hpc_hd_textreuse_etl_spark.operators.defrag import piece_id_mappings
 
     pieces = _synthetic_pieces_from_events(spark)
@@ -2980,61 +2980,18 @@ def _install_sampling_oracles() -> None:
 _install_sampling_oracles()
 
 
-def _curated_corpus_oracle(
-    dsir_keep: int | None = None,
-    dsir_num_buckets: int = 512,
-    dsir_salt: str = "dsir-select-v1",
-    classifier_keep: int | None = None,
-    classifier_num_buckets: int = 512,
-) -> str:
+def _curated_corpus_oracle() -> str:
     """DuckDB oracle recomputing the ENTIRE curation chain
     (plans/curation.py): quality gate → exact dedup (min-id per sha256)
     → portable-minhash pairs → recursive-CTE component closure →
     canonical keeper → trigram decontamination vs the benchmark →
-    hash-gate split. With ``dsir_keep``, the opt-in DSIR selection
-    stage (weights over the clean survivors, Gumbel top-k) is appended
-    between decontamination and the split — mirroring
-    ``curate(cfg.dsir_keep, dsir_target_predicate=lang=='en')``. With
-    ``classifier_keep``, the discriminative NB quality-filter stage
-    (_nb_sql over the survivors, labels lang=='en', keep the top-N
-    log-odds) is appended in the same slot — mirroring
-    ``curate(cfg.classifier_keep, classifier_label_predicate=...)``."""
+    hash-gate split."""
     from hpc_hd_textreuse_etl_spark.operators.sampling import threshold
 
     stop = "('the','a','of','and','in','to','is')"
     pairs_sql = _minhash_oracle(
         num_hashes=32, shingle=5, num_bands=8, threshold=0.7, table="e"
     )
-    split_src = "clean"
-    dsir_ctes = ""
-    if dsir_keep is not None:
-        split_src = "kept"
-        gumbel_h = _DUCK_H.format(
-            x=f"'{dsir_salt}|' || CAST(doc_id AS VARCHAR)"
-        )
-        dsir_ctes = f""", {_dsir_weights_sql(dsir_num_buckets, table="clean")},
-    pri AS (
-      SELECT doc_id,
-             log_weight - ln(-ln(({gumbel_h} + 0.5)
-                                 / 1152921504606846976.0)) AS p
-      FROM wts
-    ), kept AS (
-      SELECT doc_id FROM pri ORDER BY p DESC, doc_id LIMIT {dsir_keep}
-    )"""
-    if classifier_keep is not None:
-        if split_src == "clean":
-            csrc = "clean"
-        else:  # dsir ran first: re-attach text to the kept id set
-            csrc = "csrc"
-            dsir_ctes += """, csrc AS (
-      SELECT c.doc_id, c.text FROM clean c JOIN kept USING (doc_id)
-    )"""
-        dsir_ctes += f""", {_nb_sql(classifier_num_buckets, table=csrc)},
-    ckept AS (
-      SELECT doc_id FROM nbscores
-      ORDER BY log_odds DESC, doc_id LIMIT {classifier_keep}
-    )"""
-        split_src = "ckept"
     return f"""
     WITH RECURSIVE corpus AS (
       SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0
@@ -3081,13 +3038,13 @@ def _curated_corpus_oracle(
       -- per reference (measured 518 s vs ~1 s at sf0.001)
       SELECT doc_id, text FROM nd
       WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
-    ){dsir_ctes}
+    )
     SELECT doc_id,
            CASE WHEN ('0x' || substr(md5('split-v1|' ||
                       CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
                      < {threshold(0.2)}
                 THEN 'test' ELSE 'train' END AS split
-    FROM {split_src}
+    FROM clean
     """
 
 
@@ -5402,33 +5359,6 @@ def dsir_resampled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "curated_corpus_dsir",
-    oracle=_curated_corpus_oracle(dsir_keep=60),
-    tags=("curation-pipeline", "dsir", "importance-sampling",
-          "beyond-parity"),
-)
-def curated_corpus_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The curation pipeline with the opt-in DSIR selection stage: after
-    quality gate → exact dedup → near-dup resolution → decontamination,
-    the 60 most English-like survivors are drawn ∝ importance weight
-    (hashed-bigram models over the survivors, deterministic Gumbel
-    top-k) before the train/test split — six operator families composed
-    and the DuckDB oracle recomputes every stage, so a drift anywhere
-    in the chain (including the new selection stage's weights, noise,
-    and keep boundary) fails the value-hash."""
-    from hpc_hd_textreuse_etl_spark.plans.curation import CurationConfig, curate
-
-    docs = spark.table("documents")
-    bench = docs.filter(F.col("doc_id") % 50 == 0)
-    corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    return curate(
-        corpus, bench,
-        cfg=CurationConfig(hash_family="portable", dsir_keep=60),
-        dsir_target_predicate=F.col("lang") == "en",
-    )
-
-
-@query(
     "repeated_segment_dedup",
     oracle=f"""
     WITH tok AS (
@@ -5916,62 +5846,6 @@ def quality_lr_ranking_reloaded(spark: SparkSession, sf_dir: str) -> DataFrame:
     wnd = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return topk.withColumn("rank", F.row_number().over(wnd).cast("int")).select(
         "doc_id", "rank"
-    )
-
-
-@query(
-    "curated_corpus_classifier",
-    oracle=_curated_corpus_oracle(classifier_keep=60),
-    tags=("curation-pipeline", "quality-classifier", "beyond-parity"),
-)
-def curated_corpus_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The curation pipeline with the opt-in discriminative
-    quality-filter stage: after quality gate → exact dedup → near-dup
-    resolution → decontamination, an NB classifier trains on the
-    survivors (labels lang=='en') and the 60 highest-log-odds survivors
-    proceed to the train/test split — six operator families composed,
-    and the DuckDB oracle recomputes every stage including the
-    classifier's features, class counts, smoothing, prior, score fold,
-    and the keep boundary."""
-    from hpc_hd_textreuse_etl_spark.plans.curation import CurationConfig, curate
-
-    docs = spark.table("documents")
-    bench = docs.filter(F.col("doc_id") % 50 == 0)
-    corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    return curate(
-        corpus, bench,
-        cfg=CurationConfig(hash_family="portable", classifier_keep=60),
-        classifier_label_predicate=F.col("lang") == "en",
-    )
-
-
-@query(
-    "curated_corpus_dsir_classifier",
-    oracle=_curated_corpus_oracle(dsir_keep=90, classifier_keep=45),
-    tags=("curation-pipeline", "dsir", "quality-classifier",
-          "beyond-parity"),
-)
-def curated_corpus_dsir_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BOTH opt-in selection stages composed: DSIR keeps the 90 most
-    target-like survivors of the clean chain, then the NB quality
-    filter trains on THAT kept set (labels lang=='en') and keeps its 45
-    highest-log-odds members before the split — seven operator families
-    end to end. This exercises the oracle's re-attach branch (the
-    classifier's feature/training source is the DSIR-kept id set joined
-    back to the survivor texts), which the dsir-only and
-    classifier-only twins never touch."""
-    from hpc_hd_textreuse_etl_spark.plans.curation import CurationConfig, curate
-
-    docs = spark.table("documents")
-    bench = docs.filter(F.col("doc_id") % 50 == 0)
-    corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    return curate(
-        corpus, bench,
-        cfg=CurationConfig(
-            hash_family="portable", dsir_keep=90, classifier_keep=45
-        ),
-        dsir_target_predicate=F.col("lang") == "en",
-        classifier_label_predicate=F.col("lang") == "en",
     )
 
 

@@ -15,7 +15,9 @@ Stage map (reference asset → builder here):
 
 Differences by design (SURVEY §7): native ``left_anti`` instead of
 right-join+IS NULL; ``row_number``/zipWithIndex dense ids instead of an
-RDD helper everywhere; the defrag UDAF is an ``applyInPandas`` scan; no
+RDD helper everywhere; the defrag UDAF is a bounded self-range-join
+(operators/defrag.py); the book-restricted reception variants reuse the
+unrestricted operators over a semi-joined member set; no
 orchestrator — stages are plain functions returning DataFrames, composed
 by :func:`build_pipeline` (materialization is the caller's choice via
 catalog.materialise).
@@ -29,7 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hpc_hd_textreuse_etl_spark.functions.ids import dense_ids
-from hpc_hd_textreuse_etl_spark.functions.intervals import merge_intervals
 from hpc_hd_textreuse_etl_spark.operators import defrag as D
 from hpc_hd_textreuse_etl_spark.operators import clustering as C
 from hpc_hd_textreuse_etl_spark.operators.reception import (
@@ -168,7 +169,7 @@ def textreuse_source_lengths(sources: DataFrame, trs_ids: DataFrame) -> DataFram
 
 
 def _island_run_cols(
-    part_cols: list[str], start: str, end: str, adjacency_gap: int = 1
+    part_cols: list[str], start: str, end: str
 ) -> tuple[F.Column, F.Column]:
     """Per-ROW island contributions over one pair-partitioned sorted
     window: ``(new_island_flag, extent_contribution)``.
@@ -178,13 +179,10 @@ def _island_run_cols(
     island contributes ``max(0, e - running_max_e_before)`` (extending
     the island's right edge or nothing). Summing per pair reproduces
     ``SUM(island_end - island_start)`` over merged islands exactly —
-    including the reference's extent (not union) semantics, where
-    ≤``adjacency_gap`` holes inside an island count as covered. Summing
-    the flags reproduces the island count. This turns the two-level
-    islands aggregation into pure window expressions, so BOTH coverage
-    directions run on the same rows under ONE pair-keyed exchange
-    (second direction = one extra sort, no shuffle) and the per-side
-    aggregate branches + their join disappear from the plan."""
+    including the reference's extent (not union) semantics, where holes
+    of ≤1 char inside an island count as covered. Summing the flags
+    reproduces the island count. This turns the two-level islands
+    aggregation into pure window expressions."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(*[F.col(c) for c in part_cols]).orderBy(
@@ -194,7 +192,7 @@ def _island_run_cols(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
     new_island = F.when(
-        prev_end.isNull() | (prev_end + F.lit(adjacency_gap) < F.col(start)),
+        prev_end.isNull() | (prev_end + F.lit(1) < F.col(start)),
         F.lit(1),
     ).otherwise(F.lit(0))
     contrib = F.when(
@@ -203,36 +201,64 @@ def _island_run_cols(
     return new_island, contrib
 
 
+def _two_sided_islands(
+    edges: DataFrame,
+    pair: list[str],
+    side1: tuple[str, str],
+    side2: tuple[str, str],
+    lengths: DataFrame,
+) -> DataFrame:
+    """Per document pair, each side's merged islands (gaps-and-islands,
+    holes of ≤1 char bridged): ``num1``/``num2`` count them,
+    ``reuse1``/``reuse2`` sum their extents, and ``length1``/``length2``
+    are the two documents' lengths, LEFT-joined so that a pair missing a
+    source length keeps NULL ratios instead of being dropped (reference
+    coverages.py:161-162, 304-305).
+
+    Plan shape (round 11): ONE pair-keyed exchange total. Both sides are
+    computed on the SAME rows via per-row extent contributions
+    (:func:`_island_run_cols` — the telescoping-sum restatement of
+    merge-then-aggregate), so the second side costs one extra
+    in-partition sort instead of a second shuffle + aggregate branch,
+    and no pair-keyed join of two per-side aggregates is needed: both
+    sides aggregate in a single groupBy that reuses the window's
+    partitioning. The length dims broadcast: one row per document (the
+    reference's ~3M sources are about 50 MB)."""
+    n1, c1 = _island_run_cols(pair, *side1)
+    n2, c2 = _island_run_cols(pair, *side2)
+    out = (
+        edges.select(
+            *pair,
+            n1.alias("__n1"),
+            c1.alias("__c1"),
+            n2.alias("__n2"),
+            c2.alias("__c2"),
+        )
+        .groupBy(*pair)
+        .agg(
+            F.sum("__n1").cast("long").alias("num1"),
+            F.sum("__c1").alias("reuse1"),
+            F.sum("__n2").cast("long").alias("num2"),
+            F.sum("__c2").alias("reuse2"),
+        )
+    )
+    for key, name in zip(pair, ("length1", "length2")):
+        dim = lengths.select(
+            F.col("trs_id").alias(key), F.col("text_length").alias(name)
+        )
+        out = out.join(F.broadcast(dim), key, "left")
+    return out
+
+
 def coverages(
     defrag_textreuses: DataFrame,
     defrag_pieces: DataFrame,
     lengths: DataFrame,
-    broadcast_lengths: bool = True,
 ) -> DataFrame:
     """Per-document-pair reuse coverage, both directions (reference
     coverages.py:36-165): for each (trs1, trs2) merge the t1-side spans
     (gaps-and-islands) and the t2-side spans, sum merged lengths, join
-    the length dims, emit ratios ×100.
-
-    Plan shape (round 11): ONE pair-keyed exchange total. Both island
-    directions are computed on the SAME rows via per-row extent
-    contributions (:func:`_island_run_cols` — the telescoping-sum
-    restatement of merge-then-aggregate), so the t2 direction costs one
-    extra in-partition sort instead of a second shuffle + aggregate
-    branch, and the former t1⋈t2 pair-keyed join (a full sort-merge join
-    of two corpus-scale aggregates) is gone: both sides aggregate in a
-    single groupBy that reuses the window's partitioning. The round-10
-    shape (two merge_intervals branches sharing a repartition) never
-    actually shared its exchange — column pruning de-canonicalized the
-    two copies and the edge subtree ran twice.
-
-    ``broadcast_lengths``: the lengths dim is one row per DOCUMENT, so
-    it scales with the corpus (the reference's production corpus has
-    ~3M sources ≈ 50 MB — the broadcast hint is right there and at any
-    dim that fits executors). For corpora whose document count makes
-    the dim too big to broadcast, pass ``False`` and let AQE pick the
-    join strategy (the deep-ladder measurement showed the pair keyspace,
-    not this join, dominates at 10× anyway)."""
+    the length dims, emit ratios ×100 (:func:`_two_sided_islands`)."""
     p1 = defrag_pieces.select(
         F.col("piece_id").alias("piece1_id"),
         F.col("trs_id").alias("trs1_id"),
@@ -246,50 +272,19 @@ def coverages(
         F.col("trs_end").alias("t2_end"),
     )
     edges = defrag_textreuses.join(p1, "piece1_id").join(p2, "piece2_id")
-    pair = ["trs1_id", "trs2_id"]
-    n1, c1 = _island_run_cols(pair, "t1_start", "t1_end", adjacency_gap=1)
-    n2, c2 = _island_run_cols(pair, "t2_start", "t2_end", adjacency_gap=1)
-    marked = edges.select(
-        *pair,
-        n1.alias("__n1"),
-        c1.alias("__c1"),
-        n2.alias("__n2"),
-        c2.alias("__c2"),
+    both = _two_sided_islands(
+        edges, ["trs1_id", "trs2_id"],
+        ("t1_start", "t1_end"), ("t2_start", "t2_end"), lengths,
     )
-    both = marked.groupBy(*pair).agg(
-        F.sum("__c1").alias("t1_reuses_length"),
-        F.sum("__n1").cast("long").alias("t1_num_merged"),
-        F.sum("__c2").alias("t2_reuses_length"),
-        F.sum("__n2").cast("long").alias("t2_num_merged"),
-    )
-
-    hint = F.broadcast if broadcast_lengths else (lambda d: d)
-    l1 = hint(
-        lengths.select(F.col("trs_id").alias("trs1_id"), F.col("text_length").alias("t1_length"))
-    )
-    l2 = hint(
-        lengths.select(F.col("trs_id").alias("trs2_id"), F.col("text_length").alias("t2_length"))
-    )
-    # reference uses LEFT JOIN on both length dims (coverages.py:161-162,
-    # 304-305): pairs missing a source length keep NULL coverage ratios
-    # instead of being dropped
-    return (
-        both.join(l1, "trs1_id", "left")
-        .join(l2, "trs2_id", "left")
-        .select(
-            "trs1_id",
-            "trs2_id",
-            "t1_reuses_length",
-            "t2_reuses_length",
-            "t1_num_merged",
-            "t2_num_merged",
-            (F.col("t1_reuses_length") * 100.0 / F.col("t1_length")).alias(
-                "reuse_t1_t2"
-            ),
-            (F.col("t2_reuses_length") * 100.0 / F.col("t2_length")).alias(
-                "reuse_t2_t1"
-            ),
-        )
+    return both.select(
+        "trs1_id",
+        "trs2_id",
+        F.col("reuse1").alias("t1_reuses_length"),
+        F.col("reuse2").alias("t2_reuses_length"),
+        F.col("num1").alias("t1_num_merged"),
+        F.col("num2").alias("t2_num_merged"),
+        (F.col("reuse1") * 100.0 / F.col("length1")).alias("reuse_t1_t2"),
+        (F.col("reuse2") * 100.0 / F.col("length2")).alias("reuse_t2_t1"),
     )
 
 
@@ -392,32 +387,23 @@ def restricted_reception(
     eligible_trs: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
     """Collection-restricted earliest + reception edges — the book-based
-    variants (additional_assets/book_based.py:20-110) as a composition:
-    semi-join members against the eligible document set, then run the
-    SAME earliest/non-source/fan-out operators. The reference rebuilds
-    each query with inline LEFT JOIN ... IS NULL eligibility tests; here
-    eligibility is one broadcastable semi-join and the operators are
-    shared with the unrestricted path.
+    variants (additional_assets/book_based.py:20-110): the unrestricted
+    :func:`earliest_pieces_by_cluster` and :func:`reception_edges` over
+    the clustered pieces of eligible documents only. The reference
+    rebuilds each query with inline LEFT JOIN ... IS NULL eligibility
+    tests; here eligibility is one semi-join.
 
     Returns ``(earliest, edges)`` where edges run earliest-eligible →
     non-earliest-eligible within each cluster.
     """
-    members = (
-        clustered.join(defrag_pieces, "piece_id")
-        .join(F.broadcast(manifestation_dates), "trs_id", "left")
-        .join(eligible_trs.select("trs_id"), "trs_id", "left_semi")
+    eligible_pieces = defrag_pieces.join(
+        eligible_trs.select("trs_id"), "trs_id", "left_semi"
     )
-    earliest = earliest_in_group(members, ["cluster_id"], "publication_date").select(
-        "cluster_id", "piece_id", "trs_id", "publication_date"
+    members = clustered.join(eligible_pieces, "piece_id", "left_semi")
+    earliest = earliest_pieces_by_cluster(
+        members, defrag_pieces, manifestation_dates
     )
-    non_source = non_source_members(
-        members.select("cluster_id", "piece_id"),
-        earliest.select("piece_id"),
-        ["piece_id"],
-    )
-    src = earliest.select("cluster_id", F.col("piece_id").alias("src_piece_id"))
-    dst = non_source.select("cluster_id", F.col("piece_id").alias("dst_piece_id"))
-    return earliest, src.join(dst, "cluster_id")
+    return earliest, reception_edges(members, earliest)
 
 
 def source_piece_statistics_full(
@@ -530,75 +516,34 @@ def reception_coverages(edges_denorm: DataFrame, lengths: DataFrame) -> DataFram
     (additional_assets/book_based.py:147-287): per (src, dst) document
     pair, merge the src-side and dst-side spans independently
     (gaps-and-islands), count merged hits and sum merged lengths, LEFT
-    JOIN the dst aggregate branch and both length dims, and emit
-    ``(reuse / length) * 100`` per direction.
+    JOIN both length dims, and emit ``(reuse / length) * 100`` per
+    direction.
 
     Unlike :func:`coverages` the pair key is DIRECTED (source → later
-    destination), so the same two-sided islands machinery runs on the
-    reception fan-out rather than the symmetric hit graph. Both
-    directions share ONE pair-keyed exchange via the per-row island
-    contributions of :func:`_island_run_cols` (second direction = one
-    extra sort, no shuffle, no aggregate-branch join); length dims
-    broadcast."""
-    pair = ["src_trs_id", "dst_trs_id"]
-    n1, c1 = _island_run_cols(pair, "src_trs_start", "src_trs_end", adjacency_gap=1)
-    n2, c2 = _island_run_cols(pair, "dst_trs_start", "dst_trs_end", adjacency_gap=1)
-    marked = edges_denorm.select(
-        *pair,
-        n1.alias("__n1"),
-        c1.alias("__c1"),
-        n2.alias("__n2"),
-        c2.alias("__c2"),
+    destination), so the same two-sided islands aggregate
+    (:func:`_two_sided_islands`) runs on the reception fan-out rather
+    than the symmetric hit graph."""
+    both = _two_sided_islands(
+        edges_denorm, ["src_trs_id", "dst_trs_id"],
+        ("src_trs_start", "src_trs_end"), ("dst_trs_start", "dst_trs_end"),
+        lengths,
     )
-    both = marked.groupBy(*pair).agg(
-        F.sum("__n1").cast("long").alias("num_reuses_src"),
-        F.sum("__c1").alias("reuses_src"),
-        F.sum("__n2").cast("long").alias("num_reuses_dst"),
-        F.sum("__c2").alias("reuses_dst"),
+    return both.select(
+        "src_trs_id",
+        F.col("num1").alias("num_reuses_src"),
+        F.col("reuse1").alias("reuses_src_in_dst"),
+        F.col("length1").alias("src_length"),
+        ((F.col("reuse1") / F.col("length1")) * 100.0).alias(
+            "coverage_src_in_dst"
+        ),
+        "dst_trs_id",
+        F.col("num2").alias("num_reuses_dst"),
+        F.col("reuse2").alias("reuses_dst_in_src"),
+        F.col("length2").alias("dst_length"),
+        ((F.col("reuse2") / F.col("length2")) * 100.0).alias(
+            "coverage_dst_in_src"
+        ),
     )
-    l1 = F.broadcast(
-        lengths.select(
-            F.col("trs_id").alias("src_trs_id"),
-            F.col("text_length").alias("src_length"),
-        )
-    )
-    l2 = F.broadcast(
-        lengths.select(
-            F.col("trs_id").alias("dst_trs_id"),
-            F.col("text_length").alias("dst_length"),
-        )
-    )
-    return (
-        both.join(l1, "src_trs_id", "left")
-        .join(l2, "dst_trs_id", "left")
-        .select(
-            "src_trs_id",
-            "num_reuses_src",
-            F.col("reuses_src").alias("reuses_src_in_dst"),
-            "src_length",
-            ((F.col("reuses_src") / F.col("src_length")) * 100.0).alias(
-                "coverage_src_in_dst"
-            ),
-            "dst_trs_id",
-            "num_reuses_dst",
-            F.col("reuses_dst").alias("reuses_dst_in_src"),
-            "dst_length",
-            ((F.col("reuses_dst") / F.col("dst_length")) * 100.0).alias(
-                "coverage_dst_in_src"
-            ),
-        )
-    )
-
-
-def source_piece_statistics_denorm(
-    stats: DataFrame, defrag_pieces: DataFrame, trs_edition_mapping: DataFrame
-) -> DataFrame:
-    """Statistics denormalized with piece spans and edition links
-    (reference source_piece_statistics.py:65-85)."""
-    dp = defrag_pieces.select(
-        F.col("piece_id").alias("src_piece_id"), "trs_id", "trs_start", "trs_end"
-    )
-    return stats.join(dp, "src_piece_id").join(trs_edition_mapping, "trs_id")
 
 
 # ---------------------------------------------------------------------------

@@ -97,24 +97,3 @@ def test_quality_gate_is_streaming_safe(spark, tmp_path, split_docs):
     run_to_memory(gated, "q_gate_stream")
     stream_ids = {r.doc_id for r in spark.table("q_gate_stream").collect()}
     assert stream_ids == batch_ids and len(batch_ids) > 0
-
-
-@pytest.mark.slow  # soak tier, default-off (round-12 verify-window fix; run with -m slow)
-def test_curate_dsir_selection_stage(spark, split_docs):
-    """The opt-in DSIR stage keeps exactly dsir_keep survivors, all of
-    them survivors of the base chain, and requires a target predicate."""
-    corpus, bench = split_docs
-    base = {
-        r.doc_id
-        for r in curate(corpus, bench, cfg=CFG).select("doc_id").collect()
-    }
-    cfg = CurationConfig(hash_family="portable", dsir_keep=60)
-    sel = curate(
-        corpus, bench, cfg=cfg, dsir_target_predicate=F.col("lang") == "en"
-    ).collect()
-    kept = {r.doc_id for r in sel}
-    assert len(kept) == 60
-    assert kept <= base  # selection only narrows the survivor set
-    assert {r.split for r in sel} <= {"train", "test"}
-    with pytest.raises(ValueError):
-        curate(corpus, bench, cfg=cfg)  # keep set but no target predicate

@@ -85,17 +85,9 @@ def _synthetic_pieces(n_docs: int = 20, per_doc: int = 40, seed: int = 7):
     return rows
 
 
-def test_spark_mapping_matches_pure_scan(spark):
-    rows = _synthetic_pieces()
-    df = spark.createDataFrame(rows, "trs_id int, trs_start int, trs_end int, piece_id long")
-    got = {
-        r.orig_piece_id: r.defrag_piece_id
-        for r in piece_id_mappings(df).collect()
-    }
-    assert len(got) == len(rows)
-
-    # recompute expected raw targets per doc with the pure scan, then
-    # renumber sorted distinct targets 1..N (ipynb cell 5 semantics)
+def _scan_reference(rows) -> dict[int, int]:
+    """``piece_id -> defrag_piece_id`` from the pure per-document scan,
+    sorted distinct targets renumbered 1..N (ipynb cell 5 semantics)."""
     raw_expected = {}
     by_doc: dict[int, list] = {}
     for doc, s, e, pid in rows:
@@ -106,18 +98,29 @@ def test_spark_mapping_matches_pure_scan(spark):
         for pid, target in zip(pids, defrag_scan_group(list(starts), list(ends), list(pids))):
             raw_expected[pid] = target
     renumber = {t: i + 1 for i, t in enumerate(sorted(set(raw_expected.values())))}
-    expected = {pid: renumber[t] for pid, t in raw_expected.items()}
-    assert got == expected
+    return {pid: renumber[t] for pid, t in raw_expected.items()}
+
+
+def test_spark_mapping_matches_pure_scan(spark):
+    rows = _synthetic_pieces()
+    df = spark.createDataFrame(rows, "trs_id int, trs_start int, trs_end int, piece_id long")
+    got = {
+        r.orig_piece_id: r.defrag_piece_id
+        for r in piece_id_mappings(df).collect()
+    }
+    assert len(got) == len(rows)
+    assert got == _scan_reference(rows)
 
 
 def test_join_strategy_equals_scan_strategy(spark):
-    """The JVM range-join formulation must be row-identical to the
-    sequential applyInPandas scan on varied span data."""
+    """The range-join formulation must be row-identical to the
+    sequential scan on varied span data (more and denser documents than
+    the test above)."""
     rows = _synthetic_pieces(n_docs=30, per_doc=60, seed=11)
     df = spark.createDataFrame(rows, "trs_id int, trs_start int, trs_end int, piece_id long")
-    join_m = {(r.orig_piece_id, r.defrag_piece_id) for r in piece_id_mappings(df, strategy="join").collect()}
-    scan_m = {(r.orig_piece_id, r.defrag_piece_id) for r in piece_id_mappings(df, strategy="scan").collect()}
-    assert join_m == scan_m
+    got = [(r.orig_piece_id, r.defrag_piece_id) for r in piece_id_mappings(df).collect()]
+    assert len(got) == len(rows)
+    assert dict(got) == _scan_reference(rows)
 
 
 def test_defrag_pieces_and_textreuses(spark):

@@ -3,6 +3,10 @@ duplicate insensitivity, partition-count independence, isolated nodes."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from hpc_hd_textreuse_etl_spark.operators.graph import connected_components
@@ -474,3 +478,25 @@ def test_kcore_random_equivalence(spark, edges, k):
     }
     want = brute_kcore([e for e in edges if e[0] != e[1]], k) if edges else {}
     assert got == want
+
+
+def test_session_temp_dir_removed_at_exit(tmp_path):
+    """The default checkpoint dir of connected_components and
+    chinese_whispers outlives the call (returned frames read it lazily)
+    but not the interpreter."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from hpc_hd_textreuse_etl_spark.functions.checkpoints import session_temp_dir\n"
+        "d = session_temp_dir('cc_ckpt_')\n"
+        "open(os.path.join(d, 'part'), 'w').close()\n"
+        "print(d)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True,
+        check=True, env={**os.environ, "TMPDIR": str(tmp_path)},
+    )
+    made = out.stdout.strip()
+    assert os.path.dirname(made) == str(tmp_path)
+    assert os.path.basename(made).startswith("cc_ckpt_")
+    assert not os.path.exists(made)

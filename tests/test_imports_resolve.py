@@ -1,7 +1,8 @@
 """Every reference to a package module from the scripts around the
 package must resolve. The default test run executes neither the
 examples nor the slow tier, so a dangling import there would otherwise
-go unseen until someone runs the script."""
+go unseen until someone runs the script. The pipeline's plan modules
+must also import without pandas."""
 
 from __future__ import annotations
 
@@ -10,6 +11,8 @@ import importlib
 import importlib.util
 import os
 import re
+import subprocess
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "hpc_hd_textreuse_etl_spark"
@@ -68,3 +71,18 @@ def test_every_package_reference_resolves():
         if not _resolves(ref)
     )
     assert not dangling, "\n".join(dangling)
+
+
+def test_pipeline_plans_do_not_load_pandas():
+    """The text-reuse DAG and curation run no pandas UDF, so importing
+    their plans must not pay pandas' import time (about 0.4 s)."""
+    code = (
+        "import sys\n"
+        f"import {PKG}.plans.textreuse, {PKG}.plans.curation\n"
+        "print('pandas' in sys.modules)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True,
+        text=True, check=True,
+    )
+    assert out.stdout.strip() == "False"

@@ -292,14 +292,6 @@ def test_nb_classifier_model_broadcasts_and_topk_heaps(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_curated_classifier_stage_no_cartesian(spark):
-    """The classifier curation stage composes onto the survivor chain
-    as broadcast/semi joins only — no cartesian product anywhere in
-    the six-stage pipeline."""
-    plan = executed_plan(spark, "curated_corpus_classifier")
-    assert "CartesianProduct" not in plan
-
-
 def test_ivfpq_codebooks_broadcast_no_cartesian(spark):
     """PQ codebooks and the per-query ADC lookup table are m·ks-row
     configs — they must reach their joins as broadcasts; the candidate

@@ -95,30 +95,6 @@ def test_read_jsonl_files_matches_zip_scan(spark, hits_zip, tmp_path):
     )
 
 
-def test_bucketed_adjacency_roundtrip(spark, tmp_path):
-    """S6: bucketed+sorted table sink is readable and keeps the
-    adjacency shape for the iterative join."""
-    from hpc_hd_textreuse_etl_spark.operators.clustering import (
-        adjacency_list,
-        write_bucketed_adjacency,
-    )
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3)], "piece1_id long, piece2_id long"
-    )
-    adj = write_bucketed_adjacency(
-        spark, adjacency_list(edges), table="adj_test", buckets=4,
-        path=str(tmp_path / "adj_test.parquet"),
-    )
-    got = {r.piece_id: sorted(r.other_piece_ids) for r in adj.collect()}
-    assert got == {1: [2, 3], 2: [1, 3], 3: [1, 2]}
-    # bucketing metadata recorded in the catalog
-    desc = spark.sql("DESCRIBE EXTENDED adj_test").collect()
-    text = "\n".join(str(r) for r in desc)
-    assert "piece_id" in text
-    spark.sql("DROP TABLE adj_test")
-
-
 def test_read_csv_with_schema(spark, tmp_path):
     p = tmp_path / "meta.csv"
     p.write_text(
