@@ -204,12 +204,12 @@ def materialise(
     df: DataFrame,
     path: str,
     name: str | None = None,
-    partition_by: list[str] | None = None,
     target_files: int | None = None,
 ) -> DataFrame:
-    """Write parquet snapshot, read back, register. Downstream consumers
-    see on-disk data (lineage truncation), matching the reference's
-    immutable-snapshot contract (``spark_utils.py:113-122``).
+    """Write an unpartitioned parquet snapshot, read back, register.
+    Downstream consumers see on-disk data (lineage truncation), matching
+    the reference's immutable-snapshot contract
+    (``spark_utils.py:113-122``).
 
     ``target_files`` bounds the snapshot's file count via ``coalesce``
     (no shuffle — it narrows the final stage; write parallelism drops to
@@ -220,10 +220,7 @@ def materialise(
     parallelism matters more than file count."""
     if target_files is not None:
         df = df.coalesce(target_files)
-    writer = df.write.mode("overwrite").option("compression", "zstd")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    df.write.mode("overwrite").option("compression", "zstd").parquet(path)
     out = spark.read.parquet(path)
     if name:
         out.createOrReplaceTempView(name)

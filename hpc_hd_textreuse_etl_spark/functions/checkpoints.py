@@ -69,8 +69,8 @@ def release_local_checkpoints(blocking: bool = False) -> int:
     all consumers of the checkpointed plans have materialized their
     outputs — later reads fail loudly (see module docstring). Handles
     from an already-stopped session are skipped. ``blocking=True`` waits
-    for block eviction to finish — the bench loop uses it so cleanup
-    cannot overlap the next repeat's timed region."""
+    for block eviction to finish — ``trbench`` uses it so cleanup
+    cannot overlap the next stage's timed region."""
     released = 0
     for ck in _LIVE:
         try:

@@ -4,8 +4,8 @@ Each :class:`QuerySpec` pairs a Spark DataFrame builder with the
 equivalent ANSI SQL for the DuckDB oracle, exercising one or more
 operators from SURVEY.md §2 on the driver's synthetic tables
 (``TESTDATA.md``). Registered here once; consumed by
-``__spark_entry__.py`` (driver contract), ``bench.py`` and
-``tests/test_oracle_parity.py``.
+``__spark_entry__.py`` (driver contract), ``examples/scale_ladder.py``
+and ``tests/test_oracle_parity.py``.
 
 Cross-engine exactness rules (so the driver's value-hash matches):
 
@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hpc_hd_textreuse_etl_spark.catalog import load_testdata
+from hpc_hd_textreuse_etl_spark.functions.checkpoints import session_temp_dir
 from hpc_hd_textreuse_etl_spark.functions.skew import spread_small_input
 
 
@@ -46,7 +47,7 @@ class QuerySpec:
     builder: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL; None → driver does rows-only check
     tags: tuple[str, ...] = ()
-    bench: bool = False  # include in bench.py headline set
+    bench: bool = False  # include in examples/scale_ladder.py's headline set
     #: golden expected-output records for oracle-free queries whose
     #: output is nonetheless bit-deterministic (seeded CW): maps a
     #: testdata dir BASENAME (e.g. "sf0.01") to
@@ -5626,8 +5627,6 @@ def quality_classifier_ranking_reloaded(
     (quality_classifier_ranking), so any bit drift through the
     persistence layer (double truncation, row loss, column reorder)
     fails the value-hash."""
-    import tempfile
-
     from hpc_hd_textreuse_etl_spark.functions.model_store import (
         load_model,
         save_model,
@@ -5642,7 +5641,7 @@ def quality_classifier_ranking_reloaded(
         _nb_train_docs(spark), "doc_id", "text", "is_pos",
         num_buckets=512, hash_family="portable",
     )
-    path = tempfile.mkdtemp(prefix="nb-model-")
+    path = session_temp_dir("nb-model-")
     save_model(model, path, "nb_quality_model", params)
     reloaded = load_model(spark, path, "nb_quality_model", params)
     w = nb_quality_scores(
@@ -5817,8 +5816,6 @@ def quality_lr_ranking_reloaded(spark: SparkSession, sf_dir: str) -> DataFrame:
     layer reorders the ranking and fails the hash. Completes the
     reloaded-gate symmetry: NB (quality_classifier_ranking_reloaded),
     IVF-PQ (ann_ivfpq_topk_reloaded), LR (here)."""
-    import tempfile
-
     from hpc_hd_textreuse_etl_spark.functions.model_store import (
         load_model,
         save_model,
@@ -5835,7 +5832,7 @@ def quality_lr_ranking_reloaded(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_buckets=512, iters=8, learning_rate=0.5, l2=0.0,
         hash_family="portable",
     )
-    path = tempfile.mkdtemp(prefix="lr-model-")
+    path = session_temp_dir("lr-model-")
     save_model(model, path, "lr_quality_model", params)
     reloaded = load_model(spark, path, "lr_quality_model", params)
     w = lr_quality_scores(
@@ -5996,8 +5993,6 @@ def ann_ivfpq_topk_reloaded(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the index-build-nightly / query-all-day deployment shape; the
     sidecar's params check is what stops a query batch from probing an
     index trained with different (m, ks, seed) knobs."""
-    import tempfile
-
     from hpc_hd_textreuse_etl_spark.functions.model_store import (
         load_model,
         save_model,
@@ -6017,7 +6012,7 @@ def ann_ivfpq_topk_reloaded(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks, codes = pq_train(
         emb, "vec_id", "embedding", 8, 8, 1, 42, 64, "portable"
     )
-    base = tempfile.mkdtemp(prefix="ivfpq-index-")
+    base = session_temp_dir("ivfpq-index-")
     parts = {
         "centroids": centroids, "assignments": assignments,
         "codebooks": codebooks, "codes": codes,

@@ -88,14 +88,14 @@ class Registry:
         spark: SparkSession,
         base_dir: str,
         targets: Sequence[str] | None = None,
-        overwrite: bool = False,
         clear_cache_per_asset: bool = False,
         default_target_files: int | None = None,
     ) -> dict[str, DataFrame]:
         """Materialize the closure of ``targets`` under ``base_dir``.
 
-        Existing snapshots are reused unless ``overwrite`` (builders of
-        satisfied assets never even construct their plan).
+        Existing complete snapshots (``_SUCCESS`` marker) are reused:
+        builders of satisfied assets never even construct their plan. To
+        rebuild an asset, materialise into a fresh ``base_dir``.
 
         ``default_target_files`` bounds each snapshot's parquet file
         count (small-files hygiene across a many-stage DAG — see
@@ -125,7 +125,7 @@ class Registry:
         done: dict[str, DataFrame] = {}
         for name in self.order(targets):
             path = table_path(base_dir, name)
-            if not overwrite and snapshot_is_valid(spark, path):
+            if snapshot_is_valid(spark, path):
                 done[name] = spark.read.parquet(path)
                 done[name].createOrReplaceTempView(name)
                 continue

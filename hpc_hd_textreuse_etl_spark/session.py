@@ -12,7 +12,6 @@ handling, partition coalescing) and Arrow for the Pandas-UDF path.
 from __future__ import annotations
 
 import os
-import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -59,12 +58,15 @@ def _ship_package(spark: SparkSession) -> None:
 
 def _build_package_zip() -> str:
     """Zip every .py of this package (import-rooted, __pycache__
-    excluded) into a temp file suitable for ``addPyFile``. Split out of
-    :func:`_ship_package` so the completeness of the shipped artifact is
-    unit-testable without spawning executors."""
+    excluded) into a temp file suitable for ``addPyFile``, in a dir
+    removed when the interpreter exits. Split out of :func:`_ship_package`
+    so the completeness of the shipped artifact is unit-testable without
+    spawning executors."""
+    from hpc_hd_textreuse_etl_spark.functions.checkpoints import session_temp_dir
+
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(
-        tempfile.mkdtemp(prefix="spark-pkg-"), "hpc_hd_textreuse_etl_spark.zip"
+        session_temp_dir("spark-pkg-"), "hpc_hd_textreuse_etl_spark.zip"
     )
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(pkg_dir):

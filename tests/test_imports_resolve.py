@@ -16,7 +16,7 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "hpc_hd_textreuse_etl_spark"
-SCAN = ("examples", "trbench", "tests", "bench.py", "__spark_entry__.py")
+SCAN = ("examples", "trbench", "tests", "__spark_entry__.py")
 DOTTED = re.compile(re.escape(PKG) + r"((?:\.[A-Za-z_]\w*)+)")
 
 

@@ -69,6 +69,24 @@ def test_zip_is_importable_as_sys_path_root():
     assert out.stdout.strip() == "ok"
 
 
+def test_package_zip_dir_removed_at_exit(tmp_path):
+    """Each session that ships the package builds a fresh zip; its dir
+    must not outlive the interpreter that made it."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from hpc_hd_textreuse_etl_spark.session import _build_package_zip\n"
+        "print(_build_package_zip())\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True,
+        check=True, env={**os.environ, "TMPDIR": str(tmp_path)},
+    )
+    made = os.path.dirname(out.stdout.strip())
+    assert os.path.dirname(made) == str(tmp_path)
+    assert os.path.basename(made).startswith("spark-pkg-")
+    assert not os.path.exists(made)
+
+
 @pytest.mark.slow  # soak tier, default-off (round-12 verify-window fix; run with -m slow)
 def test_retry_determinism_under_injected_task_failures():
     """SCALE.md's retry claim, executed: with master local[8,2] every
