@@ -217,11 +217,14 @@ def materialise(
     default-shuffle-partition files per snapshot decays into a
     small-files/listing problem, the batch twin of what streaming state
     compaction fixes). Leave None for large assets where write
-    parallelism matters more than file count."""
+    parallelism matters more than file count.
+
+    The snapshot is read back with the schema it was written with: an
+    inferring read costs one footer-reading job per snapshot."""
     if target_files is not None:
         df = df.coalesce(target_files)
     df.write.mode("overwrite").option("compression", "zstd").parquet(path)
-    out = spark.read.parquet(path)
+    out = spark.read.schema(df.schema).parquet(path)
     if name:
         out.createOrReplaceTempView(name)
     return out

@@ -817,11 +817,12 @@ def resolve_duplicates(
 
     Returns ``(id, canonical_id, is_canonical)`` covering EVERY row of
     ``df``; singletons are their own canonical. Groups come from
-    large-star/small-star connected components over the pair graph
-    (operators/graph.py — O(log n) bounded-shuffle rounds; at corpus
-    scale pass a shared ``checkpoint_dir``); the pair graph is orders of
-    magnitude smaller than the corpus, so the loop never touches
-    document bodies.
+    connected components over the pair graph (operators/graph.py: a
+    union-find per task over the canonical pairs, written once, then
+    O(log n) bounded-shuffle star rounds only if more than one task held
+    pairs; at corpus scale pass a shared ``checkpoint_dir``); the pair
+    graph is orders of magnitude smaller than the corpus, so CC never
+    touches document bodies.
 
     Keeper choice: by default the smallest id in the group (equals the
     component label — deterministic and engine-reproducible). Pass

@@ -10,23 +10,39 @@ the iterative-graph family whose result SQL can verify exactly — which
 puts this file under the full DuckDB-oracle gate, where CW can only get
 a rows-only check.
 
-Algorithm: alternating **large-star / small-star** (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14) — the standard
-shuffle-bounded formulation for Spark scale:
+Algorithm: a local contraction, then large-star / small-star rounds
+only if the contraction did not already finish the job.
 
-- every round is ``groupBy(u).min`` + an equi-join back on ``u`` — both
-  shuffle on the same key, so AQE plans one exchange reused by both;
-- the edge set shrinks monotonically toward one star per component, in
-  O(log² n) rounds (O(log n) in practice) — a 10⁹-edge graph at the
-  reference's scale converges in ~10 rounds, each a bounded shuffle, vs
-  the unbounded frontier growth of naive label flooding;
-- per-round parquet round-trips on alternating paths stop physical
-  recomputation growth (``localCheckpoint`` does NOT bound the
-  recompute chain).
+- **Round 0.** After the canonical ``distinct`` exchange, one
+  ``mapInArrow`` task per partition runs a union-find over that
+  partition's edges (NumPy, root = smallest id) and emits ``(node,
+  root)`` for every node that is not a root: a star forest, never more
+  edges than its input. It is written once, and that write is the only read of the
+  caller's edge plan, however lazy that plan is.
+- **One-task stop.** The same write observes which tasks emitted rows.
+  If one task saw every edge — at benchmark size AQE coalesces the
+  exchange to one partition — its star forest is the answer and no
+  star round runs: one write for the whole operator.
+- **Star rounds** (Kiveris et al., "Connected Components in MapReduce
+  and Beyond", SoCC'14) follow only after a multi-task round 0, on the
+  contracted edge set. Each is ``groupBy(u).min`` + an equi-join back on
+  ``u`` — both shuffle on the same key, so AQE plans one exchange reused
+  by both; the edge set shrinks toward one star per component in
+  O(log² n) rounds (O(log n) in practice), each a bounded shuffle, vs
+  the unbounded frontier growth of naive label flooding. The loop stops
+  when a round's output repeats its input (a checksum observed during
+  the write).
+
+Every round, round 0 included, is a parquet round trip on alternating
+paths: that stops physical recomputation growth (``localCheckpoint``
+does NOT bound the recompute chain). Round 0's union-find holds one
+task's input, which AQE's advisory partition size bounds.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +58,40 @@ def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
+    )
+
+
+def _union_find(batches):
+    """Round 0 over one partition's canonical edges: ``(u, v)`` = (node,
+    root of its component within this partition) for every node that is
+    not a root; the root is the component's smallest id."""
+    batches = [batch for batch in batches if batch.num_rows]
+    if not batches:
+        return
+    u = np.concatenate([batch.column("u").to_numpy() for batch in batches])
+    v = np.concatenate([batch.column("v").to_numpy() for batch in batches])
+    # dense indices in id order, so the smallest index is the smallest id
+    ids, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u):]
+    parent = np.arange(len(ids))
+    while True:
+        # parent[] is flat here (every node points straight at its root)
+        # and no root is larger than a node under it, so hooking the
+        # larger root of each split edge under the smaller cannot cycle
+        ra, rb = parent[a], parent[b]
+        split = ra != rb
+        if not split.any():
+            break
+        lo, hi = np.minimum(ra[split], rb[split]), np.maximum(ra[split], rb[split])
+        np.minimum.at(parent, hi, lo)
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+    child = np.flatnonzero(parent != np.arange(len(ids)))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids[child]), pa.array(ids[parent[child]])], names=["u", "v"]
     )
 
 
@@ -93,11 +143,19 @@ def connected_components(
     """``(node, component)`` — component = smallest node id reachable
     from ``node``; deterministic, partition-count independent.
 
+    Round 0 contracts each task's edges by union-find into a star forest
+    and writes it to ``{checkpoint_dir}/edges_0``. If one task emitted
+    every row, that forest is the answer and nothing more runs. Otherwise
+    star rounds continue from the contracted edges, alternating between
+    ``edges_1`` and ``edges_0``, until a round repeats its input;
+    ``max_iter`` bounds the star rounds, and exceeding it raises
+    ``RuntimeError``.
+
     ``nodes`` (optional, one column ``node_col``) adds isolated vertices
     that appear in no edge; they label themselves.
 
     ``checkpoint_dir`` must be a path visible to every executor (HDFS /
-    object store) — the per-iteration parquet round-trip is the lineage
+    object store) — the per-round parquet round-trip is the lineage
     cut that keeps plans flat. The default, a :func:`session_temp_dir`
     removed at interpreter exit, is a DRIVER-LOCAL path, valid only on
     ``local[*]`` masters where driver and executors share a filesystem;
@@ -119,16 +177,19 @@ def connected_components(
                 f"to executors (master={master!r})"
             )
     checkpoint = checkpoint_dir or session_temp_dir("cc_ckpt_")
-    e = _canonical(edges, src, dst)
-    prev = None
-    for it in range(max_iter):
-        e = _small_star(_large_star(e))
-        e, cur = _truncate(spark, e, checkpoint, it)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+    contracted = _canonical(edges, src, dst).mapInArrow(_union_find, "u long, v long")
+    e, prev, one_task = _truncate(spark, contracted, checkpoint, 0)
+    if not one_task:
+        for it in range(1, max_iter + 1):
+            e = _small_star(_large_star(e))
+            e, cur, _ = _truncate(spark, e, checkpoint, it)
+            if cur == prev:
+                break
+            prev = cur
+        else:
+            raise RuntimeError(
+                f"connected_components: no fixpoint in {max_iter} rounds"
+            )
     labels = e.select(F.col("u").alias(node_col), F.col("v").alias("component")).union(
         e.select(F.col("v").alias(node_col), F.col("v").alias("component"))
     ).distinct()
@@ -143,21 +204,31 @@ def connected_components(
 
 def _truncate(
     spark: SparkSession, e: DataFrame, checkpoint: str, it: int
-) -> tuple[DataFrame, tuple[int, int]]:
-    """Parquet round-trip + convergence checksum in ONE job: the
-    checksum rides the write via ``observe`` — a separate ``agg().collect()``
-    re-read the parquet just written, one extra job per CC round
-    (guide §4.3 driver round trips)."""
+) -> tuple[DataFrame, tuple[int, int], bool]:
+    """Parquet round-trip to ``{checkpoint}/edges_{it % 2}``, returning
+    the read-back edges, the convergence checksum and whether every row
+    came from one task. The metrics ride the write via ``observe`` — a
+    separate ``agg().collect()`` re-read the parquet just written, one
+    extra job per CC round."""
     from pyspark.sql import Observation
 
     path = f"{checkpoint}/edges_{it % 2}"
     obs = Observation()
-    e.observe(obs, *_checksum_metrics()).write.mode("overwrite").option(
+    e.withColumn("task", F.spark_partition_id()).observe(
+        obs,
+        *_checksum_metrics(),
+        F.min("task").alias("first"),
+        F.max("task").alias("last"),
+    ).select("u", "v").write.mode("overwrite").option(
         "compression", "zstd"
     ).parquet(path)
     got = obs.get
     # the known schema spares a footer-reading inference job per round
-    return spark.read.schema(e.schema).parquet(path), (int(got["n"]), int(got["h"] or 0))
+    return (
+        spark.read.schema(e.schema).parquet(path),
+        (int(got["n"]), int(got["h"] or 0)),
+        got["first"] == got["last"],
+    )
 
 
 def pagerank_scaled(

@@ -18,7 +18,9 @@ Scale shape of the composition (what survives 100 TB):
   signature aggregation) regardless of how many stages run;
 - the near-dup pair graph and the benchmark gram set are orders of
   magnitude smaller than the corpus — connected components runs on
-  pairs only, benchmark grams broadcast;
+  pairs only (a union-find per task, written once, which reads the
+  lazy MinHash pairs once; star rounds only if the pairs span several
+  tasks), benchmark grams broadcast;
 - the split tag is the deterministic hash gate (operators/sampling) —
   no shuffle, reproducible across reruns and backfills.
 """

@@ -4,8 +4,10 @@ duplicate insensitivity, partition-count independence, isolated nodes."""
 from __future__ import annotations
 
 import os
+import random
 import subprocess
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -53,10 +55,67 @@ def test_partition_count_independent(spark, tmp_path):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
+@contextmanager
+def _uncoalesced(spark):
+    """Keep every shuffle partition its own task, so round 0 runs in
+    several tasks and the star rounds are reached."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def _union_find_labels(edges, nodes=()):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    for n in nodes:
+        find(n)
+    return {(x, find(x)) for x in parent}
+
+
 def test_no_fixpoint_raises(spark, tmp_path):
     e = spark.createDataFrame([(i, i + 1) for i in range(1, 40)], "src long, dst long")
-    with pytest.raises(RuntimeError, match="no fixpoint"):
+    with _uncoalesced(spark), pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(e, max_iter=1, checkpoint_dir=str(tmp_path))
+
+
+def test_multi_task_rounds_match_union_find(spark, tmp_path):
+    """Round 0 in several tasks, then star rounds: random graphs plus a
+    300-node path, with isolated nodes, against a plain union-find."""
+    rng = random.Random(5)
+    edges = [(rng.randrange(400), rng.randrange(400)) for _ in range(300)]
+    edges += [(rng.randrange(400, 800), rng.randrange(400, 800)) for _ in range(500)]
+    path = [(1000 + i, 1001 + i) for i in range(299)]
+    edges += [(b, a) if rng.random() < 0.5 else (a, b) for a, b in path]
+    rng.shuffle(edges)
+    nodes = sorted({n for ed in edges for n in ed} | {5000, 5001, 5002})
+    want = _union_find_labels(edges, nodes)
+    with _uncoalesced(spark):
+        got = _run(spark, edges, nodes=nodes, checkpoint_dir=str(tmp_path))
+    assert got == want
+    assert os.path.exists(tmp_path / "edges_1")  # star rounds ran
+
+
+def test_one_task_round_zero_is_the_answer(spark, tmp_path):
+    edges = [(i, i + 1) for i in range(1, 30)] + [(50, 40), (40, 45)]
+    e = spark.createDataFrame(edges, "src long, dst long").repartition(1)
+    got = connected_components(e, checkpoint_dir=str(tmp_path))
+    assert {(r.node, r.component) for r in got.collect()} == _union_find_labels(edges)
+    assert sorted(os.listdir(tmp_path)) == ["edges_0"]  # no star round ran
 
 
 # ---------------------------------------------------------------------------
@@ -140,7 +199,6 @@ def test_pagerank_zero_iterations_is_uniform(spark):
 # ---------------------------------------------------------------------------
 
 from itertools import combinations  # noqa: E402
-import random  # noqa: E402
 
 from hpc_hd_textreuse_etl_spark.operators.graph import triangle_count  # noqa: E402
 

@@ -194,6 +194,38 @@ def test_materialise_roundtrip_and_if_absent(spark, tmp_path):
     assert again.count() == 5
 
 
+def test_materialise_reads_back_written_schema_in_one_job(spark, tmp_path):
+    """The snapshot comes back with the schema an inferring read would
+    find, without the inference job: a shuffle-free call is one job."""
+    from decimal import Decimal
+
+    df = spark.createDataFrame(
+        [
+            (
+                7, "a", [1, 2], {"k": 1.5}, Decimal("12.34"),
+                datetime.date(1701, 3, 4),
+                datetime.datetime(2020, 1, 2, 3, 4, 5),
+            ),
+            (8, None, None, None, None, None, None),
+        ],
+        "l long, s string, arr array<int>, m map<string,double>, "
+        "d decimal(10,2), day date, ts timestamp",
+    )
+    out = str(tmp_path / "typed.parquet")
+    sc = spark.sparkContext
+    sc.setJobGroup("materialise-one-job", "materialise")
+    try:
+        got = materialise(spark, df, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("materialise-one-job")
+    assert len(jobs) == 1
+    assert got.schema == spark.read.parquet(out).schema
+    assert sorted(map(tuple, got.collect()), key=str) == sorted(
+        map(tuple, df.collect()), key=str
+    )
+
+
 def test_register_with_cache(spark):
     from hpc_hd_textreuse_etl_spark.catalog import register
 
