@@ -11,13 +11,17 @@ Two strategies, picked by expected cardinality:
 - ``row_number() OVER (ORDER BY keys)`` — one wide window. Catalyst plans
   a single global sort; the final window runs on one task, fine for
   dimension tables (≤ tens of millions of rows).
-- sort + ``rdd.zipWithIndex`` — two jobs (count per partition, then
-  label), but every partition is labeled in parallel; this is the scale
-  path for fact tables with billions of rows (the reference's
-  ``piece_id`` exceeds 2^32, ``database_assets/downstream_clusters.py:18``).
+- sort + a JVM-only ``zipWithIndex`` — a count per partition, then a
+  label pass that adds each partition's offset from a literal array, so
+  every partition is labeled in parallel with no broadcast join and no
+  Python worker task; this is the scale path for fact tables with
+  billions of rows (the reference's ``piece_id`` exceeds 2^32,
+  ``database_assets/downstream_clusters.py:18``).
 """
 
 from __future__ import annotations
+
+from itertools import accumulate
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -34,8 +38,13 @@ def zip_with_index(df: DataFrame, id_col: str = "id", offset: int = 1) -> DataFr
     pickle every row through Python — unusable at fact-table scale):
     ``monotonically_increasing_id`` encodes ``partition_id * 2^33 +
     local_offset`` with consecutive local offsets, so decoding it and
-    adding per-partition cumulative counts (a tiny driver collect +
-    broadcast join) yields the exact global ordinal. Two scans of the
+    adding per-partition cumulative counts yields the exact global
+    ordinal. The counts come back to the driver in one small collect and
+    go out again as a literal array indexed by partition id (one entry
+    per partition up to the largest non-empty one, so empty partitions
+    are covered): no offsets table, no broadcast join, and no Python
+    worker task — a ``createDataFrame`` of the offsets would be a
+    parallelized, pickled RDD with a job of its own. Two scans of the
     input, zero shuffles of the data itself.
 
     The input MUST be materialized once and read by both passes: the
@@ -59,24 +68,20 @@ def zip_with_index(df: DataFrame, id_col: str = "id", offset: int = 1) -> DataFr
     tagged = tracked_local_checkpoint(
         df.withColumn("__mono", F.monotonically_increasing_id())
     )
+    pid = F.shiftright("__mono", 33)
     counts = (
-        tagged.groupBy(F.shiftright("__mono", 33).alias("__pid"))
+        tagged.groupBy(pid.alias("__pid"))
         .agg(F.count(F.lit(1)).alias("__n"))
         .collect()
     )
-    cum: list[tuple[int, int]] = []
-    acc = offset
-    for row in sorted(counts, key=lambda r: r["__pid"]):
-        cum.append((row["__pid"], acc))
-        acc += row["__n"]
-    offsets = df.sparkSession.createDataFrame(cum, "__pid long, __off long")
+    n = {row["__pid"]: row["__n"] for row in counts}
+    sizes = [n.get(p, 0) for p in range(max(n, default=0) + 1)]
+    starts = accumulate(sizes[:-1], initial=offset)
     local = F.col("__mono").bitwiseAND(F.lit((1 << 33) - 1))
-    out = (
-        tagged.withColumn("__pid", F.shiftright("__mono", 33))
-        .join(F.broadcast(offsets), "__pid")
-        .withColumn(id_col, (F.col("__off") + local).cast("long"))
-        .drop("__pid", "__mono", "__off")
+    start = F.element_at(
+        F.array(*[F.lit(x).cast("long") for x in starts]), (pid + 1).cast("int")
     )
+    out = tagged.withColumn(id_col, (start + local).cast("long")).drop("__mono")
     return out.select(id_col, *df.columns)
 
 

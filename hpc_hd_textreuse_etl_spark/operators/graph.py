@@ -195,7 +195,9 @@ def connected_components(
     ).distinct()
     if nodes is not None:
         n = nodes.select(F.col(node_col).cast("long").alias(node_col)).distinct()
-        labels = n.join(labels, node_col, "left").select(
+        # full, not left: an edge endpoint that ``nodes`` omits keeps
+        # its label instead of dropping out
+        labels = n.join(labels, node_col, "full").select(
             F.col(node_col),
             F.coalesce("component", F.col(node_col)).alias("component"),
         )

@@ -16,6 +16,7 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from hpc_hd_textreuse_etl_spark.catalog import (
     materialise,
@@ -41,6 +42,8 @@ class CycleError(ValueError):
 class Registry:
     def __init__(self) -> None:
         self._recipes: dict[str, Recipe] = {}
+        #: snapshot path -> the schema it was written or first read with
+        self._schemas: dict[str, StructType] = {}
 
     def add(
         self,
@@ -97,6 +100,17 @@ class Registry:
         builders of satisfied assets never even construct their plan. To
         rebuild an asset, materialise into a fresh ``base_dir``.
 
+        A reused snapshot is read with the schema this ``Registry`` wrote
+        or first read it with, so its schema is inferred (one
+        footer-reading job) at most once per path per ``Registry``. That
+        matters because every call walks its targets' whole dependency
+        closure: a pipeline that materialises stage by stage would
+        otherwise pay one inference job per upstream snapshot per call.
+        A snapshot this ``Registry`` has not seen (resuming in a new
+        process) is still inferred; reuse across processes without
+        inference needs a manifest written with each snapshot, which
+        does not exist yet.
+
         ``default_target_files`` bounds each snapshot's parquet file
         count (small-files hygiene across a many-stage DAG — see
         catalog.materialise); a recipe's own ``target_files`` overrides
@@ -126,7 +140,10 @@ class Registry:
         for name in self.order(targets):
             path = table_path(base_dir, name)
             if snapshot_is_valid(spark, path):
-                done[name] = spark.read.parquet(path)
+                known = self._schemas.get(path)
+                reader = spark.read if known is None else spark.read.schema(known)
+                done[name] = reader.parquet(path)
+                self._schemas[path] = done[name].schema
                 done[name].createOrReplaceTempView(name)
                 continue
             recipe = self._recipes[name]
@@ -137,6 +154,7 @@ class Registry:
                 else default_target_files
             )
             done[name] = materialise(spark, df, path, name=name, target_files=tf)
+            self._schemas[path] = done[name].schema
             if clear_cache_per_asset:
                 # only drops builders' internal persists/checkpoints —
                 # done[name] and the registered view read the snapshot

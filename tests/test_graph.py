@@ -47,6 +47,14 @@ def test_isolated_nodes_label_themselves(spark, tmp_path):
     assert got == {(1, 1), (2, 1), (7, 7), (9, 9)}
 
 
+def test_nodes_listing_only_isolated_ids_keeps_edge_endpoints(spark, tmp_path):
+    """``nodes`` only adds vertices: a list holding just the isolated ids
+    must not drop the endpoints of the edges."""
+    edges = [(1, 2), (2, 3), (5, 6)]
+    got = _run(spark, edges, nodes=[7, 9], checkpoint_dir=str(tmp_path))
+    assert got == {(1, 1), (2, 1), (3, 1), (5, 5), (6, 5), (7, 7), (9, 9)}
+
+
 def test_partition_count_independent(spark, tmp_path):
     edges = [(i, i + 1) for i in range(1, 30)] + [(100, 101), (101, 102)]
     e = spark.createDataFrame(edges, "src long, dst long")

@@ -145,3 +145,72 @@ def test_zip_with_index_stable_under_nondeterministic_upstream(spark):
     # and each id is the exact sorted rank of its value
     by_val = sorted(out, key=lambda r: r.val)
     assert all(r.i == rank + 1 for rank, r in enumerate(by_val))
+
+
+def test_zip_with_index_dense_over_empty_partitions(spark):
+    """Offsets cover every partition id up to the largest non-empty one,
+    so empty partitions — the first, the last and some in between —
+    neither shift nor break the labeling. AQE coalescing is off, so the
+    zip sees all 16 input partitions and the sort is not coalesced; both
+    paths must give exactly the sorted ranks 1..N."""
+    conf = spark.conf
+    saved = {
+        k: conf.get(k)
+        for k in (
+            "spark.sql.adaptive.coalescePartitions.enabled",
+            "spark.sql.shuffle.partitions",
+        )
+    }
+    try:
+        conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        conf.set("spark.sql.shuffle.partitions", "16")
+        # 16 input partitions of 100 ids; 0, 3, 7, 8 and 15 emptied
+        empty = [0, 3, 7, 8, 15]
+        df = spark.range(0, 1600, 1, 16).filter(
+            ~(F.floor(F.col("id") / 100)).isin(empty)
+        )
+        assert df.rdd.getNumPartitions() == 16
+        out = zip_with_index(df, id_col="rid").collect()
+        want = sorted(r.id for r in df.collect())
+        assert [r.rid for r in out] == list(range(1, len(want) + 1))
+        assert [r.id for r in out] == want
+
+        vals = df.select(
+            F.format_string("v%05d", (F.col("id") * 7919) % 1600).alias("val")
+        )
+        assert vals.rdd.getNumPartitions() == 16
+        z = dense_ids(vals, ["val"], "i", use_window=False).collect()
+        got = sorted((r.i, r.val) for r in z)
+        assert [i for i, _ in got] == list(range(1, len(want) + 1))
+        assert [v for _, v in got] == sorted(v for _, v in got)
+        w = {(r.val, r.i) for r in dense_ids(vals, ["val"], "i", use_window=True).collect()}
+        assert {(v, i) for i, v in got} == w
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
+
+
+#: jobs to build and write the 5 000-row input below (measured); an
+#: offsets table broadcast-joined into the labels adds one
+ZIP_PATH_JOBS = 6
+
+
+def test_zip_path_job_count(spark, tmp_path):
+    """Building and writing ``dense_ids(use_window=False)`` runs no job
+    for the per-partition offsets: they travel as a literal array, not a
+    parallelized table that is broadcast-joined (one job more, in Python
+    workers)."""
+    sc = spark.sparkContext
+    df = spark.range(0, 5000, 1, 4).select(
+        F.format_string("k%05d", (F.col("id") * 7919) % 5000).alias("val")
+    )
+    group = "test_zip_path_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        dense_ids(df, ["val"], "i", use_window=False).write.parquet(
+            str(tmp_path / "ids")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= ZIP_PATH_JOBS, jobs

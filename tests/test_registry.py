@@ -50,6 +50,42 @@ def test_resume_skips_existing(spark, tmp_path):
     assert calls == ["summed"]  # base + doubled reused from disk
 
 
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reuse_reads_known_schema_without_jobs(spark, tmp_path):
+    """Every materialise call walks its targets' closure; a snapshot this
+    Registry wrote is reused with the schema it was written with, so the
+    reuse runs no footer-reading inference job, and the schema is the one
+    an inferring read gives. A fresh Registry over the same dir still
+    reuses the snapshot without calling the builder."""
+    calls = []
+    reg = _make_registry(calls)
+    reg.materialise(spark, str(tmp_path), ["base"])
+    assert calls == ["base"]
+    out, jobs = _jobs_in_group(
+        spark, "test_reuse_known_schema",
+        lambda: reg.materialise(spark, str(tmp_path), ["base"]),
+    )
+    assert jobs == 0
+    assert calls == ["base"]
+    inferred = spark.read.parquet(str(tmp_path / "base.parquet"))
+    assert out["base"].schema == inferred.schema
+    assert out["base"].count() == 10
+
+    reg2 = _make_registry(calls)
+    again = reg2.materialise(spark, str(tmp_path), ["base"])
+    assert calls == ["base"]  # reused from disk, not rebuilt
+    assert again["base"].schema == inferred.schema
+
+
 def test_partial_snapshot_rebuilt(spark, tmp_path):
     """A crashed write (directory without _SUCCESS) must be rebuilt, not
     trusted."""
