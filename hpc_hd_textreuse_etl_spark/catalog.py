@@ -233,24 +233,6 @@ def materialise(
 def snapshot_is_valid(spark: SparkSession, path: str) -> bool:
     """A snapshot counts only with its ``_SUCCESS`` marker: a crashed
     write leaves a directory without one, and trusting it surfaces later
-    as an unreadable-parquet error in some downstream stage."""
-    return path_exists(spark, path) and path_exists(spark, f"{path}/_SUCCESS")
-
-
-def materialise_if_absent(
-    spark: SparkSession,
-    builder,
-    path: str,
-    name: str | None = None,
-) -> DataFrame:
-    """Skip recompute when a *complete* output already exists
-    (``spark_utils.py:125-136``; completeness = ``_SUCCESS`` marker —
-    partial snapshots from crashed runs are rebuilt, not trusted).
-    ``builder`` is a zero-arg callable returning the DataFrame, so the
-    plan isn't even constructed on skip."""
-    if snapshot_is_valid(spark, path):
-        out = spark.read.parquet(path)
-        if name:
-            out.createOrReplaceTempView(name)
-        return out
-    return materialise(spark, builder(), path, name)
+    as an unreadable-parquet error in some downstream stage. The reuse
+    path built on it is ``plans.registry.Registry.materialise``."""
+    return path_exists(spark, f"{path}/_SUCCESS")

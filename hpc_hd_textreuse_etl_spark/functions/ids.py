@@ -6,7 +6,8 @@ stable sorted order (``etl_textreuse/spark_utils.py:140-230``:
 ``materialise_with_int_id``). Ids are contractually dense and sorted —
 ``monotonically_increasing_id`` is NOT a valid substitute.
 
-Two strategies, picked by expected cardinality:
+Two strategies, picked from Catalyst's size estimate of the input
+(:func:`dense_ids`):
 
 - ``row_number() OVER (ORDER BY keys)`` — one wide window. Catalyst plans
   a single global sort; the final window runs on one task, fine for
@@ -85,9 +86,9 @@ def zip_with_index(df: DataFrame, id_col: str = "id", offset: int = 1) -> DataFr
     return out.select(id_col, *df.columns)
 
 
-#: auto-strategy threshold: inputs whose Catalyst size estimate exceeds
-#: this go through the parallel zip path; a global single-task window
-#: sort is only acceptable for dimension-sized data
+#: dense-id strategy threshold: inputs whose Catalyst size estimate
+#: exceeds this go through the parallel zip path; a global single-task
+#: window sort is only acceptable for dimension-sized data
 WINDOW_MAX_BYTES = 256 << 20
 
 
@@ -95,7 +96,7 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's size estimate for the optimized plan (bytes), or None
     if it can't be read. File sources propagate real sizes through
     filters/projections; plans with no statistics report Long.MaxValue —
-    which the auto-strategy treats as 'too big', the scale-safe
+    which :func:`dense_ids` treats as 'too big', the scale-safe
     direction."""
     try:
         return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
@@ -103,32 +104,23 @@ def plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def dense_ids(
-    df: DataFrame,
-    order_by: list[str],
-    id_col: str = "id",
-    use_window: bool | None = None,
-    window_max_bytes: int = WINDOW_MAX_BYTES,
-) -> DataFrame:
+def dense_ids(df: DataFrame, order_by: list[str], id_col: str = "id") -> DataFrame:
     """Assign dense ids 1..N ordered by ``order_by`` over the given rows.
 
-    ``use_window=None`` auto-picks from Catalyst's plan-size estimate
-    (:func:`plan_size_bytes`): window only when the input is provably
-    dimension-sized (estimate ≤ ``window_max_bytes``), the parallel
+    One rule picks the strategy from Catalyst's plan-size estimate
+    (:func:`plan_size_bytes`): the window when the input is provably
+    dimension-sized (estimate ≤ :data:`WINDOW_MAX_BYTES`), the parallel
     sorted-zipWithIndex path otherwise — including when no estimate
     exists, so "unknown" can never silently become a single-task global
     window over a fact table. Both paths produce identical ids
-    (strategy-agreement tested); the knob is purely physical.
+    (strategy-agreement tested); the choice is purely physical.
     """
-    if use_window is None:
-        size = plan_size_bytes(df)
-        use_window = size is not None and size <= window_max_bytes
-    if use_window:
+    size = plan_size_bytes(df)
+    if size is not None and size <= WINDOW_MAX_BYTES:
         # deliberately unpartitioned: a dense GLOBAL ordinal needs a
-        # global order. This path is for DIMENSION-sized inputs only
-        # (its WindowExec single-partition warning is the documented
-        # exception in SCALE.md "Unpartitioned windows"); fact-scale
-        # callers pass use_window=False for the parallel zip path.
+        # global order. Reached only by dimension-sized inputs (its
+        # WindowExec single-partition warning is the documented
+        # exception in SCALE.md "Unpartitioned windows").
         w = Window.orderBy(*[F.col(c) for c in order_by])
         return df.withColumn(id_col, F.row_number().over(w))
     return zip_with_index(df.orderBy(*order_by), id_col=id_col)
@@ -139,19 +131,19 @@ def with_int_id(
     value_col: str,
     id_col: str | None = None,
     keep_value: bool = False,
-    use_window: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Re-key a string/composite column to a dense int id.
 
     Returns ``(rekeyed_df, mapping_df)`` where ``mapping_df`` has
     ``(value_col, id_col)`` for the distinct sorted values — the
     equivalent of ``materialise_with_int_id``
-    (``spark_utils.py:176-230``), reusable as a dimension table.
+    (``spark_utils.py:176-230``), reusable as a dimension table. The
+    mapping's ids come from :func:`dense_ids`, which picks its strategy
+    from the distinct values' size estimate.
     """
     id_col = id_col or f"{value_col}_id"
     mapping = dense_ids(
-        df.select(value_col).distinct(), order_by=[value_col], id_col=id_col,
-        use_window=use_window,
+        df.select(value_col).distinct(), order_by=[value_col], id_col=id_col
     )
     joined = df.join(mapping, value_col, "inner")
     if not keep_value:

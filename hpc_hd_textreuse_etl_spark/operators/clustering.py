@@ -11,8 +11,9 @@ algorithm:
 - each iteration, every active vertex picks the arg-max cluster of its
   vote map with uniform tie-breaking (reservoir rule over the sorted
   keys: the j-th tied key replaces the pick with probability ``1/j``)
-  and moves there with probability 0.9; a move sends ``-1``/``+1`` to
-  the old/new cluster's vote of every neighbour occurrence;
+  and moves there with probability ``UPDATE_PROB`` (0.9); a move sends
+  ``-1``/``+1`` to the old/new cluster's vote of every neighbour
+  occurrence;
 - a vertex is active in the next iteration if a neighbour moved, or if
   its pick was tied and its vote map has been unchanged for fewer than
   ``tie_freeze`` iterations;
@@ -69,7 +70,6 @@ not.
 from __future__ import annotations
 
 import hashlib
-from decimal import Decimal
 
 import numpy as np
 import pyarrow as pa
@@ -78,6 +78,10 @@ from pyspark.sql import functions as F
 
 #: a coin is ``pmod(hash, 1e9)``, read as the fraction ``v / 1e9``
 _M = 1_000_000_000
+#: the probability that an active vertex moves to its pick
+UPDATE_PROB = 0.9
+#: a vertex moves when its coin is at most this (``UPDATE_PROB`` in coins)
+_GATE_MAX = round(UPDATE_PROB * _M)
 
 # XXH64 as Spark's ``xxhash64`` applies it (org.apache.spark.sql.catalyst
 # .expressions.XXH64): each argument is hashed with the previous hash as
@@ -207,8 +211,7 @@ class _Component:
                 c[k] = c.get(k, 0) + 1
             self.counts.append(c)
 
-    def step(self, it: int, seed: int, family: str, gate_max: int,
-             tie_freeze: int | None) -> None:
+    def step(self, it: int, seed: int, family: str, tie_freeze: int | None) -> None:
         """One synchronous iteration number ``it``: every active vertex
         picks from the vote maps as they stood at the start."""
         coins, accept = _FAMILIES[family]
@@ -236,7 +239,7 @@ class _Component:
             for a, k in zip(at[ok].tolist(), key[ok].tolist()):
                 best[a] = k
         old = self.labels[act]
-        move = (best != old) & (coins([self.ids[act]], (it, seed + 1)) <= gate_max)
+        move = (best != old) & (coins([self.ids[act]], (it, seed + 1)) <= _GATE_MAX)
 
         n = len(self.ids)
         received = np.zeros(n, dtype=bool)
@@ -285,7 +288,6 @@ def chinese_whispers(
     adj: DataFrame,
     max_iter: int = 100,
     seed: int = 42,
-    update_prob: float = 0.9,
     checkpoint: str | None = None,
     resume: bool = False,
     tie_freeze: int | None = 5,
@@ -388,15 +390,13 @@ def chinese_whispers(
         grouped.repartition("component").sortWithinPartitions("component"),
         eager=False,
     )
-    gate_max = int(Decimal(repr(update_prob)) * _M)
-
     def run(rows: pa.Table, stop: int) -> tuple[_Component, list[int]]:
         # the active count at it0 and after each iteration run
         comp = _Component(rows)
         history = [int(comp.active.sum())]
         it = it0
         while it < stop and comp.active.any():
-            comp.step(it, seed, hash_family, gate_max, tie_freeze)
+            comp.step(it, seed, hash_family, tie_freeze)
             it += 1
             history.append(int(comp.active.sum()))
         return comp, history

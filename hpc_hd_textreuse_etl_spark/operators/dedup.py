@@ -29,6 +29,9 @@ from hpc_hd_textreuse_etl_spark.functions.hashing import (
 )
 from hpc_hd_textreuse_etl_spark.functions.text import char_shingles_of, tokens
 
+#: the hash families of the MinHash and decontamination stages
+HASH_FAMILIES = ("xxhash64", "portable")
+
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
@@ -218,12 +221,15 @@ def minhash_near_duplicates(
 ) -> DataFrame:
     """End-to-end MinHash near-dup: LSH candidates verified by estimated
     Jaccard (signature agreement fraction) ≥ threshold."""
+    from hpc_hd_textreuse_etl_spark.functions.checkpoints import tracked_persist
+
     rows_per_band = num_hashes // num_bands
-    # signatures feed banding AND both sides of the verify join — persist
-    # (at production scale, materialize the signature table to parquet)
-    sigs = minhash_signatures(
+    # signatures feed banding AND both sides of the verify join — persist,
+    # tracked for release_local_checkpoints() (at production scale,
+    # materialize the signature table to parquet)
+    sigs = tracked_persist(minhash_signatures(
         df, id_col, text_col, num_hashes, shingle_size, hash_family
-    ).persist()
+    ))
     cands = lsh_candidate_pairs(sigs, id_col, num_bands, rows_per_band, hash_family)
     return _verify_candidates(cands, sigs, id_col, num_hashes, threshold)
 
@@ -426,6 +432,7 @@ def simhash_near_duplicates(
     recall beyond the guarantee for fewer buckets."""
     if hash_family == "portable":
         bits = min(bits, 60)
+    from hpc_hd_textreuse_etl_spark.functions.checkpoints import tracked_persist
     from hpc_hd_textreuse_etl_spark.functions.skew import spread_small_input
 
     # the per-document bit-vote fold is the pipeline's dominant CPU and
@@ -434,12 +441,11 @@ def simhash_near_duplicates(
     # persist: the signature table feeds BOTH sides of the banding
     # self-join, and the fold projection sits above the shared exchange
     # on each side — unpinned, the fold evaluated once per side
-    # (the minhash signature-persist pattern; released at the
-    # registry/bench hygiene points).
-    sigs = (
+    # (the minhash signature-persist pattern; tracked, so
+    # release_local_checkpoints() frees it).
+    sigs = tracked_persist(
         spread_small_input(df.select(F.col(id_col), F.col(text_col)))
         .select(F.col(id_col), simhash(text_col, bits, hash_family).alias("sig"))
-        .persist()
     )
     return signature_near_duplicates(
         sigs, id_col, "sig", max_hamming, band_bits, bits, collapse_identical
@@ -931,7 +937,7 @@ def semantic_dedup(
     the paper's ``n_cells ≈ corpus / target_cell_size`` regime as
     code, so trusting the default never yields ``(N/const)²`` pair
     work at scale (the same honesty contract as ``dense_ids``'
-    ``use_window=None`` auto, functions/ids.py). An explicit
+    size-estimate rule, functions/ids.py). An explicit
     ``n_cells`` is used untouched; the one count job this costs is
     noted here because the operator is otherwise lazy-until-checkpoint.
     Centroids broadcast (``n_cells`` rows); the group resolution runs
@@ -1144,20 +1150,20 @@ def ngram_contamination(
     distinct gram set is broadcast, so the corpus scans once with no
     shuffle before the per-document count. Grams travel as 8-byte
     hashes (``xxhash64`` default; ``"portable"`` = the md5 family so
-    the whole check is DuckDB-reproducible; ``"none"`` joins raw
-    strings for debugging)."""
+    the whole check is DuckDB-reproducible); any other family raises
+    ``ValueError``."""
     from hpc_hd_textreuse_etl_spark.functions.text import token_shingles
+
+    if hash_family not in HASH_FAMILIES:
+        raise ValueError(f"unknown hash_family {hash_family!r}")
+    gram_hash = portable_hash64 if hash_family == "portable" else F.xxhash64
 
     def grams(df: DataFrame, *keep: str) -> DataFrame:
         g = F.explode(
             F.array_distinct(token_shingles(F.col(text_col), n))
         ).alias("gram")
-        out = df.select(*[F.col(c) for c in keep], g)
-        if hash_family == "portable":
-            return out.select(*keep, portable_hash64(F.col("gram")).alias("g"))
-        if hash_family == "xxhash64":
-            return out.select(*keep, F.xxhash64(F.col("gram")).alias("g"))
-        return out.select(*keep, F.col("gram").alias("g"))
+        out = df.select(*keep, g)
+        return out.select(*keep, gram_hash(F.col("gram")).alias("g"))
 
     bench = grams(benchmark).distinct()
     return (

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hpc_hd_textreuse_etl_spark.functions.checkpoints import tracked_persist
 from hpc_hd_textreuse_etl_spark.functions.ids import dense_ids
 
 BUFFER_WINDOW = 180
@@ -67,42 +68,31 @@ def defrag_scan_group(starts, ends, piece_ids) -> list:
     return out
 
 
-def piece_id_mappings(
-    pieces: DataFrame,
-    doc_col: str = "trs_id",
-    start_col: str = "trs_start",
-    end_col: str = "trs_end",
-    piece_col: str = "piece_id",
-) -> DataFrame:
+def piece_id_mappings(pieces: DataFrame) -> DataFrame:
     """``orig_piece_id -> defrag_piece_id`` mapping with dense renumbered
     targets (reference: ipynb cells 4-6), raw targets from
-    :func:`raw_mappings_join`."""
-    raw = raw_mappings_join(pieces, doc_col, start_col, end_col, piece_col)
-    # the renumber consumes raw three times (distinct targets, the two
-    # zip_with_index passes, final join) — persist it; at production
-    # scale materialize it to parquet instead (the reference snapshots
+    :func:`raw_mappings_join`. ``pieces`` has the ``orig_pieces`` schema
+    (``trs_id``, ``trs_start``, ``trs_end``, ``piece_id``)."""
+    # the renumber consumes raw more than once (distinct targets for the
+    # dense ids, final join) — persist it, tracked so that
+    # release_local_checkpoints() frees it; at production scale
+    # materialize it to parquet instead (the reference snapshots
     # piece_id_mappings_tmp for the same reason, ipynb cell 4)
-    raw = raw.persist()
+    raw = tracked_persist(raw_mappings_join(pieces))
     # renumber distinct mapping targets densely, sorted (ipynb cell 5)
     targets = dense_ids(
         raw.select("defrag_mapping").distinct(),
         order_by=["defrag_mapping"],
         id_col="defrag_piece_id",
-        use_window=False,  # piece cardinality can exceed window-path comfort
     )
     return raw.join(targets, "defrag_mapping").select(
         "orig_piece_id", "defrag_piece_id"
     )
 
 
-def raw_mappings_join(
-    pieces: DataFrame,
-    doc_col: str = "trs_id",
-    start_col: str = "trs_start",
-    end_col: str = "trs_end",
-    piece_col: str = "piece_id",
-) -> DataFrame:
-    """Defrag mapping as a bounded self-range-join — pure Catalyst.
+def raw_mappings_join(pieces: DataFrame) -> DataFrame:
+    """Defrag mapping as a bounded self-range-join — pure Catalyst, over
+    ``pieces`` with the ``orig_pieces`` schema.
 
     Equivalence to the reference's sequential buffer scan: the buffer at
     step *i* holds exactly the prior pieces with ``start >= s_i - 180``
@@ -128,24 +118,20 @@ def raw_mappings_join(
     # per-window occupancy. A 10M-piece document costs ~pieces ×
     # window-density, not pieces², and the hash key (doc, bin) also
     # spreads one huge document over many tasks.
+    bin_ = F.floor(F.col("trs_start") / F.lit(BUFFER_WINDOW))
     a = pieces.select(
-        F.col(doc_col).alias("doc"),
-        F.floor(F.col(start_col) / F.lit(BUFFER_WINDOW)).alias("bin"),
-        F.col(start_col).alias("s_a"),
-        F.col(end_col).alias("e_a"),
-        F.col(piece_col).alias("p_a"),
+        F.col("trs_id").alias("doc"),
+        bin_.alias("bin"),
+        F.col("trs_start").alias("s_a"),
+        F.col("trs_end").alias("e_a"),
+        F.col("piece_id").alias("p_a"),
     )
     b = pieces.select(
-        F.col(doc_col).alias("doc"),
-        F.explode(
-            F.array(
-                F.floor(F.col(start_col) / F.lit(BUFFER_WINDOW)),
-                F.floor(F.col(start_col) / F.lit(BUFFER_WINDOW)) + 1,
-            )
-        ).alias("bin"),
-        F.col(start_col).alias("s_b"),
-        F.col(end_col).alias("e_b"),
-        F.col(piece_col).alias("p_b"),
+        F.col("trs_id").alias("doc"),
+        F.explode(F.array(bin_, bin_ + 1)).alias("bin"),
+        F.col("trs_start").alias("s_b"),
+        F.col("trs_end").alias("e_b"),
+        F.col("piece_id").alias("p_b"),
     )
     limit = F.least(
         F.greatest(

@@ -160,8 +160,9 @@ def connected_components(
     removed at interpreter exit, is a DRIVER-LOCAL path, valid only on
     ``local[*]`` masters where driver and executors share a filesystem;
     on a cluster each executor would write to its own disk and the
-    read-back would lose partitions, so it is refused there. Falls back to ``spark.sparkContext.getCheckpointDir``
-    (shared by contract) when one is set.
+    read-back would lose partitions, so it is refused there. Falls back
+    to ``spark.sparkContext.getCheckpointDir`` (shared by contract) when
+    one is set.
     """
     spark = edges.sparkSession
     if checkpoint_dir is None:

@@ -389,7 +389,6 @@ def negative_samples(
     corpus_id_col: str,
     k: int,
     salt: str = "neg-v1",
-    use_window_ids: bool = True,
 ) -> DataFrame:
     """k deterministic pseudo-random negatives per positive row — the
     negative-sampling stage of contrastive / ranking training data,
@@ -398,12 +397,12 @@ def negative_samples(
     id order), no RNG state, no driver-side draw.
 
     Construction: corpus ids get dense indexes 1..N (functions/ids —
-    window path for dim-sized corpora, sorted zipWithIndex at scale via
-    ``use_window_ids=False``); each positive explodes into i = 1..k and
-    picks index ``1 + H(salt‖key‖i) mod N``. N enters the plan as a
-    broadcast 1-row aggregate, never a driver action. The pick join is
-    a plain fact-dim equi-join (broadcastable corpus index at dim size,
-    shuffle join beyond).
+    window path for dim-sized corpora, sorted zipWithIndex at scale,
+    picked from the corpus's size estimate); each positive explodes
+    into i = 1..k and picks index ``1 + H(salt‖key‖i) mod N``. N enters
+    the plan as a broadcast 1-row aggregate, never a driver action. The
+    pick join is a plain fact-dim equi-join (broadcastable corpus index
+    at dim size, shuffle join beyond).
 
     The pick can collide with the positive's own document — callers
     needing strict negatives filter afterwards (and keep k+1 draws to
@@ -413,12 +412,7 @@ def negative_samples(
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    idx = dense_ids(
-        corpus.select(corpus_id_col),
-        [corpus_id_col],
-        "__nidx",
-        use_window=use_window_ids,
-    )
+    idx = dense_ids(corpus.select(corpus_id_col), [corpus_id_col], "__nidx")
     n1 = idx.agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
     expanded = positives.select(*key_cols).withColumn(
         "__i", F.explode(F.sequence(F.lit(1), F.lit(k)))

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from hpc_hd_textreuse_etl_spark.functions.text import stopword_ratio, tokens
 from hpc_hd_textreuse_etl_spark.operators.dedup import (
+    HASH_FAMILIES,
     decontaminate,
     minhash_near_duplicates,
     resolve_duplicates,
@@ -88,11 +89,15 @@ def curate(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The full curation chain; returns ``(id, split)`` for every
-    surviving document ('train' / 'test', disjoint by the hash gate)."""
+    surviving document ('train' / 'test', disjoint by the hash gate).
+    An unknown ``cfg.hash_family`` raises ``ValueError`` before any job
+    runs."""
     from hpc_hd_textreuse_etl_spark.functions.checkpoints import (
         tracked_local_checkpoint,
     )
 
+    if cfg.hash_family not in HASH_FAMILIES:
+        raise ValueError(f"unknown hash_family {cfg.hash_family!r}")
     q = quality_gate(docs, text_col, cfg)
     e = exact_dedup_keepers(q, id_col, text_col)
     # Pin the post-exact-dedup survivors ONCE: every stage below reads
@@ -117,8 +122,7 @@ def curate(
     clean = decontaminate(
         nd, benchmark, id_col, text_col,
         n=cfg.decontam_ngram, min_overlap=cfg.decontam_min_overlap,
-        hash_family=cfg.hash_family
-        if cfg.hash_family in ("xxhash64", "portable") else "xxhash64",
+        hash_family=cfg.hash_family,
     )
     return train_test_split(
         clean, [id_col], cfg.test_fraction, salt=cfg.split_salt

@@ -93,15 +93,10 @@ def textreuses(raw_hits: DataFrame, trs_ids: DataFrame) -> DataFrame:
             "positives_percent",
         )
     )
-    # fact-scale table (one row per BLAST hit — billions at production
-    # size, reference piece ids exceed 2^32): the zipWithIndex path
-    # labels partitions in parallel; the window path would single-task
-    # a global sort of the whole hit table
     return dense_ids(
         joined,
         ["trs1_id", "trs1_start", "trs1_end", "trs2_id", "trs2_start", "trs2_end"],
         "textreuse_id",
-        use_window=False,
     )
 
 
@@ -122,11 +117,7 @@ def orig_pieces(textreuses_df: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    # fact-scale (distinct spans ~ 2x hits) — zip path, same rationale
-    # as textreuses()
-    return dense_ids(
-        spans, ["trs_id", "trs_start", "trs_end"], "piece_id", use_window=False
-    )
+    return dense_ids(spans, ["trs_id", "trs_start", "trs_end"], "piece_id")
 
 
 def orig_textreuses(textreuses_df: DataFrame, pieces: DataFrame) -> DataFrame:

@@ -97,3 +97,28 @@ def test_quality_gate_is_streaming_safe(spark, tmp_path, split_docs):
     run_to_memory(gated, "q_gate_stream")
     stream_ids = {r.doc_id for r in spark.table("q_gate_stream").collect()}
     assert stream_ids == batch_ids and len(batch_ids) > 0
+
+
+def test_curate_rejects_unknown_hash_family(spark, split_docs):
+    corpus, bench = split_docs
+    with pytest.raises(ValueError, match="hash_family"):
+        curate(corpus, bench, cfg=CurationConfig(hash_family="md5"))
+
+
+def test_curate_leaves_nothing_cached_after_release(spark, split_docs, tmp_path):
+    """The MinHash signature table ``curate`` persists internally is
+    freed by ``release_local_checkpoints`` with the local checkpoints,
+    with no ``clearCache()``."""
+    from hpc_hd_textreuse_etl_spark.functions.checkpoints import (
+        release_local_checkpoints,
+    )
+
+    corpus, bench = split_docs
+    spark.catalog.clearCache()
+    release_local_checkpoints(blocking=True)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    out = curate(corpus, bench, cfg=CFG, checkpoint_dir=str(tmp_path / "cc")).collect()
+    assert out
+    release_local_checkpoints(blocking=True)
+    assert cache.isEmpty()

@@ -146,6 +146,29 @@ def test_simhash_near_duplicates(spark, corpus):
     assert not any({5, 6} & set(p) for p in pairs if p != (5, 6))
 
 
+def test_builder_persists_are_released_with_checkpoints(spark, corpus):
+    """``simhash_near_duplicates`` and ``piece_id_mappings`` persist an
+    intermediate they do not return; ``release_local_checkpoints`` frees
+    it, with no ``clearCache()``."""
+    from hpc_hd_textreuse_etl_spark.functions.checkpoints import (
+        release_local_checkpoints,
+    )
+    from hpc_hd_textreuse_etl_spark.operators.defrag import piece_id_mappings
+
+    spark.catalog.clearCache()
+    release_local_checkpoints(blocking=True)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert simhash_near_duplicates(corpus, "doc_id", "text", max_hamming=10).collect()
+    pieces = spark.createDataFrame(
+        [(1, 100, 500, 1), (1, 104, 504, 2), (2, 10, 80, 3)],
+        "trs_id int, trs_start int, trs_end int, piece_id long",
+    )
+    assert len(piece_id_mappings(pieces).collect()) == 3
+    assert not cache.isEmpty()
+    release_local_checkpoints(blocking=True)
+    assert cache.isEmpty()
+
+
 def test_simhash_banding_complete_within_guarantee(spark):
     """Pigeonhole property: with auto-derived chunks, EVERY pair within
     max_hamming must be found (compare against brute-force Hamming)."""

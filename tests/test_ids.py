@@ -1,5 +1,13 @@
 """Dense-id assignment: both strategies must produce identical dense,
-stable, order-preserving ids."""
+stable, order-preserving ids.
+
+``dense_ids`` picks its strategy from the input's size estimate, so a
+test reaches the window path through an input estimated under
+``WINDOW_MAX_BYTES`` (``spark.range``-derived or file-backed) and the zip
+path through one estimated over it (a Python-built DataFrame has no
+statistics) or through ``zip_with_index(df.orderBy(...))``, which is
+what ``dense_ids`` runs on that side. Each asserts the plan it got.
+"""
 
 from __future__ import annotations
 
@@ -10,6 +18,10 @@ from hpc_hd_textreuse_etl_spark.functions.ids import (
     with_int_id,
     zip_with_index,
 )
+
+
+def _has_window(df) -> bool:
+    return "Window" in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_zip_with_index_preserves_sorted_order(spark):
@@ -27,11 +39,15 @@ def test_zip_with_index_preserves_sorted_order(spark):
 
 
 def test_dense_ids_strategies_agree(spark):
-    df = spark.createDataFrame(
-        [(f"v{i:04d}",) for i in range(500)], "val string"
+    df = spark.range(500).select(
+        F.format_string("v%04d", (F.col("id") * 7919) % 500).alias("val")
     ).repartition(7)
-    w = {(r.val, r.i) for r in dense_ids(df, ["val"], "i", use_window=True).collect()}
-    z = {(r.val, r.i) for r in dense_ids(df, ["val"], "i", use_window=False).collect()}
+    window = dense_ids(df, ["val"], "i")
+    assert _has_window(window)
+    zipped = zip_with_index(df.orderBy("val"), id_col="i")
+    assert not _has_window(zipped)
+    w = {(r.val, r.i) for r in window.collect()}
+    z = {(r.val, r.i) for r in zipped.collect()}
     assert w == z
     assert {i for _, i in w} == set(range(1, 501))
 
@@ -51,11 +67,10 @@ def test_with_int_id_mapping(spark):
 
 
 def test_dense_ids_auto_strategy_is_honest(spark, tmp_path):
-    """Round-8 ADVICE/VERDICT item: ``use_window=None`` must be a real
-    decision, not a hard-coded window. Small file-backed input (known
-    small stats) → window; huge estimated input or NO estimate →
-    parallel zip path — unknown size can never silently become a
-    single-task global window."""
+    """The strategy rule must be a real decision, not a hard-coded
+    window. Small file-backed input (known small stats) → window; huge
+    estimated input or NO estimate → parallel zip path — unknown size
+    can never silently become a single-task global window."""
     from pyspark.sql import functions as F
 
     from hpc_hd_textreuse_etl_spark.functions.ids import (
@@ -76,16 +91,17 @@ def test_dense_ids_auto_strategy_is_honest(spark, tmp_path):
     unknown = spark.createDataFrame([("a",)], "val string")
     assert plan_size_bytes(unknown) > WINDOW_MAX_BYTES  # Long.MaxValue
 
-    # auto on the small input takes the window plan (a Window node,
-    # no monotonically_increasing_id); auto on the unknown-size input
-    # takes the zip path (no Window node)
+    # the small input takes the window plan (a Window node, no
+    # monotonically_increasing_id); the unknown-size input takes the
+    # zip path (no Window node)
     auto_small = dense_ids(small, ["val"], "i")
-    assert "Window" in auto_small._jdf.queryExecution().executedPlan().toString()
+    assert _has_window(auto_small)
     auto_unknown = dense_ids(unknown, ["val"], "i")
-    assert "Window" not in auto_unknown._jdf.queryExecution().executedPlan().toString()
-    # and the auto result is identical to both explicit strategies
-    w = {(r.val, r.i) for r in dense_ids(small, ["val"], "i", use_window=True).collect()}
-    assert {(r.val, r.i) for r in auto_small.collect()} == w
+    assert not _has_window(auto_unknown)
+    # and the window result is identical to the zip path's
+    zipped = zip_with_index(small.orderBy("val"), id_col="i")
+    z = {(r.val, r.i) for r in zipped.collect()}
+    assert {(r.val, r.i) for r in auto_small.collect()} == z
 
 
 def test_zip_checkpoint_release_frees_pinned_blocks(spark):
@@ -101,8 +117,10 @@ def test_zip_checkpoint_release_frees_pinned_blocks(spark):
     spark.catalog.clearCache()
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
+    # no statistics: the zip path
     df = spark.createDataFrame([(f"k{i}",) for i in range(1000)], "val string")
-    out = dense_ids(df, ["val"], "i", use_window=False)
+    out = dense_ids(df, ["val"], "i")
+    assert not _has_window(out)
     assert out.count() == 1000  # materialize the labeled output first
     assert live_checkpoint_count() >= 1
     assert jsc.getPersistentRDDs().size() > before
@@ -137,8 +155,10 @@ def test_zip_with_index_stable_under_nondeterministic_upstream(spark):
     rdd = spark.sparkContext.parallelize(range(8), 8).mapPartitionsWithIndex(
         lambda split, it: emit(split, it)
     )
-    df = spark.createDataFrame(rdd, "val string")
-    out = dense_ids(df, ["val"], "i", use_window=False).collect()
+    df = spark.createDataFrame(rdd, "val string")  # no statistics: zip path
+    labeled = dense_ids(df, ["val"], "i")
+    assert not _has_window(labeled)
+    out = labeled.collect()
     assert len(out) == n
     ids = sorted(r.i for r in out)
     assert ids == list(range(1, n + 1))  # dense, no dupes, no gaps
@@ -179,11 +199,14 @@ def test_zip_with_index_dense_over_empty_partitions(spark):
             F.format_string("v%05d", (F.col("id") * 7919) % 1600).alias("val")
         )
         assert vals.rdd.getNumPartitions() == 16
-        z = dense_ids(vals, ["val"], "i", use_window=False).collect()
-        got = sorted((r.i, r.val) for r in z)
+        zipped = zip_with_index(vals.orderBy("val"), id_col="i")
+        assert not _has_window(zipped)
+        got = sorted((r.i, r.val) for r in zipped.collect())
         assert [i for i, _ in got] == list(range(1, len(want) + 1))
         assert [v for _, v in got] == sorted(v for _, v in got)
-        w = {(r.val, r.i) for r in dense_ids(vals, ["val"], "i", use_window=True).collect()}
+        window = dense_ids(vals, ["val"], "i")  # range-sized: window path
+        assert _has_window(window)
+        w = {(r.val, r.i) for r in window.collect()}
         assert {(v, i) for i, v in got} == w
     finally:
         for k, v in saved.items():
@@ -196,8 +219,8 @@ ZIP_PATH_JOBS = 6
 
 
 def test_zip_path_job_count(spark, tmp_path):
-    """Building and writing ``dense_ids(use_window=False)`` runs no job
-    for the per-partition offsets: they travel as a literal array, not a
+    """Building and writing dense ids on the zip path runs no job for
+    the per-partition offsets: they travel as a literal array, not a
     parallelized table that is broadcast-joined (one job more, in Python
     workers)."""
     sc = spark.sparkContext
@@ -207,7 +230,7 @@ def test_zip_path_job_count(spark, tmp_path):
     group = "test_zip_path_job_count"
     sc.setJobGroup(group, group)
     try:
-        dense_ids(df, ["val"], "i", use_window=False).write.parquet(
+        zip_with_index(df.orderBy("val"), id_col="i").write.parquet(
             str(tmp_path / "ids")
         )
     finally:

@@ -395,20 +395,20 @@ def test_negative_samples_partition_independent(spark):
 
 
 def test_negative_samples_zip_index_path_matches_window_path(spark):
+    """The corpus index takes the window path for a corpus estimated
+    small (``spark.range``-derived) and the zip path for one with no
+    statistics (Python-built); the draws must not differ."""
     pos, corpus = _pos_corpus(spark)
-    a = sorted(
-        tuple(r)
-        for r in negative_samples(
-            pos, ["qid"], corpus, "doc", 2, use_window_ids=True
-        ).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in negative_samples(
-            pos, ["qid"], corpus, "doc", 2, use_window_ids=False
-        ).collect()
-    )
-    assert a == b
+    ranged = spark.range(17).select((F.col("id") + 100).alias("doc"))
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    window = negative_samples(pos, ["qid"], ranged, "doc", 2)
+    zipped = negative_samples(pos, ["qid"], corpus, "doc", 2)
+    assert "Window" in plan(window)
+    assert "Window" not in plan(zipped)
+    assert sorted(map(tuple, window.collect())) == sorted(map(tuple, zipped.collect()))
 
 
 def test_negative_samples_k_validation(spark):

@@ -9,11 +9,7 @@ import zipfile
 
 import pytest
 
-from hpc_hd_textreuse_etl_spark.catalog import (
-    materialise,
-    materialise_if_absent,
-    path_exists,
-)
+from hpc_hd_textreuse_etl_spark.catalog import materialise, path_exists
 from hpc_hd_textreuse_etl_spark.functions.dates import (
     parse_ecco_date,
     parse_eebo_date,
@@ -181,17 +177,28 @@ def test_fs_utilities(spark, tmp_path):
 
 
 def test_materialise_roundtrip_and_if_absent(spark, tmp_path):
-    out = str(tmp_path / "snap.parquet")
+    from hpc_hd_textreuse_etl_spark.catalog import table_path
+    from hpc_hd_textreuse_etl_spark.plans.registry import Registry
+
+    base = str(tmp_path / "assets")
     df = spark.range(5).withColumnRenamed("id", "x")
-    got = materialise(spark, df, out, name="snap")
+    reg = Registry()
+    reg.add("snap", builder=lambda s: df)
+    got = reg.materialise(spark, base, ["snap"])["snap"]
     assert got.count() == 5
-    assert path_exists(spark, out)
-    # second build must be skipped: builder raising proves laziness
-    def poisoned_builder():
+    assert path_exists(spark, table_path(base, "snap"))
+
+    # a complete snapshot is reused: a builder that raises proves it is
+    # never called, by the Registry that wrote the snapshot and by a
+    # fresh one (a resumed run)
+    def poisoned_builder(s):
         raise AssertionError("builder must not run when output exists")
 
-    again = materialise_if_absent(spark, poisoned_builder, out, name="snap")
-    assert again.count() == 5
+    for r in (reg, Registry()):
+        r.add("snap", builder=poisoned_builder)
+        again = r.materialise(spark, base, ["snap"])["snap"]
+        assert sorted(row.x for row in again.collect()) == list(range(5))
+        assert spark.table("snap").count() == 5
 
 
 def test_materialise_reads_back_written_schema_in_one_job(spark, tmp_path):

@@ -7,7 +7,11 @@ each stage's jobs are read from its ``statusTracker`` job group. The
 bounds are the counts measured when the offsets of dense ids became a
 literal and the Registry stopped re-inferring the schemas of snapshots
 it wrote, plus one: a change that brings back a schema-inference job per
-reused snapshot or a broadcast job per dense-id call fails here.
+reused snapshot or a broadcast job per dense-id call fails here. The
+``orig_pieces``, ``piece_id_mappings`` and ``defrag_pieces`` bounds are
+the counts measured once dense ids chose their strategy from the size
+estimate alone (at this size both renumberings take the window path),
+plus one.
 """
 
 from __future__ import annotations
@@ -25,9 +29,10 @@ N_HITS = 500
 MAX_JOBS = {
     "textreuse_ids": 4,
     "textreuses": 8,
-    "orig_pieces": 8,
+    "orig_pieces": 4,
     "orig_textreuses": 3,
-    "piece_id_mappings": 12,
+    "piece_id_mappings": 9,
+    "defrag_pieces": 4,
     "defrag_textreuses": 4,
 }
 
@@ -70,6 +75,9 @@ def _registry() -> Registry:
             builder=lambda s, textreuses, orig_pieces: TR.orig_textreuses(textreuses, orig_pieces))
     reg.add("piece_id_mappings", deps=["orig_pieces"],
             builder=lambda s, orig_pieces: D.piece_id_mappings(orig_pieces))
+    reg.add("defrag_pieces", deps=["orig_pieces", "piece_id_mappings"],
+            builder=lambda s, orig_pieces, piece_id_mappings: D.defrag_pieces(
+                orig_pieces, piece_id_mappings))
     reg.add("defrag_textreuses", deps=["orig_textreuses", "piece_id_mappings"],
             builder=lambda s, orig_textreuses, piece_id_mappings: D.defrag_textreuses(
                 orig_textreuses.select("piece1_id", "piece2_id"), piece_id_mappings))
