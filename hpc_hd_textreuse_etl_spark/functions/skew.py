@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -103,32 +102,6 @@ def salted_join(
     return out.drop("__salt")
 
 
-def _planned_partitions(plan) -> int | None:
-    """Fewest partitions among the inputs of ``plan``'s final stage: a
-    shuffle counts with its planned partition count (before adaptive
-    coalescing), a leaf scan with its RDD's (built, not run), a broadcast
-    side not at all. None when no count can be read."""
-    name = plan.getClass().getSimpleName()
-    if name == "AdaptiveSparkPlanExec":
-        # the initial plan: executing the adaptive one runs its stages
-        return _planned_partitions(plan.executedPlan())
-    if name == "InMemoryTableScanExec":
-        # building a cached scan's RDD runs the cached plan's shuffles
-        return _planned_partitions(plan.relation().cachedPlan())
-    if name == "ShuffleExchangeExec":
-        return plan.outputPartitioning().numPartitions()
-    if name == "BroadcastExchangeExec":
-        return None
-    kids = plan.children()
-    if kids.isEmpty():
-        try:
-            return plan.execute().getNumPartitions()
-        except Py4JJavaError:  # a leaf that cannot run on its own
-            return None
-    counts = [_planned_partitions(kids.apply(i)) for i in range(kids.size())]
-    return min((n for n in counts if n is not None), default=None)
-
-
 def spread_small_input(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Round-robin repartition an UNDER-PARTITIONED input before
     CPU-heavy per-row work — the straggler sibling of key salting
@@ -145,8 +118,9 @@ def spread_small_input(df: DataFrame, min_parts: int | None = None) -> DataFrame
     fires for inputs that would otherwise leave the cluster idle, and
     what it shuffles is exactly the projected columns the caller passes.
 
-    The count is read from the physical plan (:func:`_planned_partitions`)
-    without running a job, as the caller is still building its plan.
+    The count is ``df.rdd.getNumPartitions()``: building the RDD of a
+    scan or a checkpoint runs no job, but on a shuffled input adaptive
+    execution runs the shuffle first to learn its coalesced count.
 
     ``min_parts`` defaults to the session's ``defaultParallelism``.
     The repartition is keyless round-robin — deterministic under retry
@@ -155,7 +129,6 @@ def spread_small_input(df: DataFrame, min_parts: int | None = None) -> DataFrame
     (hash/min/sum aggregations, joins); it changes row order.
     """
     target = min_parts or df.sparkSession.sparkContext.defaultParallelism
-    n = _planned_partitions(df._jdf.queryExecution().executedPlan())
-    if n is None or n >= target:
+    if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

@@ -29,8 +29,17 @@ from hpc_hd_textreuse_etl_spark.functions.hashing import (
 )
 from hpc_hd_textreuse_etl_spark.functions.text import char_shingles_of, tokens
 
-#: the hash families of the MinHash and decontamination stages
+#: the hash families of the MinHash, SimHash and decontamination stages
 HASH_FAMILIES = ("xxhash64", "portable")
+
+
+def check_hash_family(hash_family: str) -> None:
+    """Raise ``ValueError`` unless ``hash_family`` is in
+    :data:`HASH_FAMILIES` — the builders branch on ``"portable"`` and
+    would otherwise run any other value as xxhash64."""
+    if hash_family not in HASH_FAMILIES:
+        raise ValueError(f"unknown hash_family {hash_family!r}")
+
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -95,8 +104,12 @@ def minhash_signatures(
       value-hash oracle gate. The mod-p wrap keeps the family
       non-monotone; a bare linear transform would make every member
       pick the same argmin shingle.
+
+    Any other family raises ``ValueError``.
     """
     from hpc_hd_textreuse_etl_spark.functions.skew import spread_small_input
+
+    check_hash_family(hash_family)
 
     # array_distinct first: every exploded row costs k hash evaluations
     # below, so deduplicating shingles up front is map-side reduction.
@@ -154,6 +167,7 @@ def _band_table(
     their candidate joins on. Pure in-row (k element_at + concat per
     band), so re-deriving it from a MATERIALIZED signature table is
     cheap — the point of persisting signatures at production scale."""
+    check_hash_family(hash_family)
 
     def band_elems(b: int) -> str:
         return ", ".join(
@@ -376,7 +390,8 @@ def simhash(colname: str, bits: int = 64, hash_family: str = "xxhash64") -> Colu
     ``hash_family="portable"`` swaps the token hash for the md5-based
     60-bit portable hash (functions/hashing.py) so the signature is
     reproducible in DuckDB SQL; pass ``bits<=60`` with it (the base hash
-    only carries 60 bits)."""
+    only carries 60 bits). Any other family raises ``ValueError``."""
+    check_hash_family(hash_family)
     if hash_family == "portable":
         if bits > 60:
             raise ValueError("portable simhash carries at most 60 bits")
@@ -1154,8 +1169,7 @@ def ngram_contamination(
     ``ValueError``."""
     from hpc_hd_textreuse_etl_spark.functions.text import token_shingles
 
-    if hash_family not in HASH_FAMILIES:
-        raise ValueError(f"unknown hash_family {hash_family!r}")
+    check_hash_family(hash_family)
     gram_hash = portable_hash64 if hash_family == "portable" else F.xxhash64
 
     def grams(df: DataFrame, *keep: str) -> DataFrame:

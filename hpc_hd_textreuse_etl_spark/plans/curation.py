@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from hpc_hd_textreuse_etl_spark.functions.text import stopword_ratio, tokens
 from hpc_hd_textreuse_etl_spark.operators.dedup import (
-    HASH_FAMILIES,
+    check_hash_family,
     decontaminate,
     minhash_near_duplicates,
     resolve_duplicates,
@@ -96,8 +96,7 @@ def curate(
         tracked_local_checkpoint,
     )
 
-    if cfg.hash_family not in HASH_FAMILIES:
-        raise ValueError(f"unknown hash_family {cfg.hash_family!r}")
+    check_hash_family(cfg.hash_family)
     q = quality_gate(docs, text_col, cfg)
     e = exact_dedup_keepers(q, id_col, text_col)
     # Pin the post-exact-dedup survivors ONCE: every stage below reads

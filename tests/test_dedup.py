@@ -8,6 +8,7 @@ import pytest
 
 from hpc_hd_textreuse_etl_spark.operators.dedup import (
     exact_duplicate_groups,
+    lsh_candidate_pairs,
     minhash_near_duplicates,
     minhash_signatures,
     simhash,
@@ -124,6 +125,17 @@ def test_minhash_delta_releases_signature_blocks(spark, corpus):
     assert out.count() > 0  # result stays readable after internal release
     assert release_local_checkpoints() == 1
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_signature_builders_reject_unknown_hash_family(spark, corpus):
+    """A misspelt family raises instead of silently running xxhash64."""
+    sigs = minhash_signatures(corpus, "doc_id", "text", 8)
+    with pytest.raises(ValueError, match="hash_family"):
+        minhash_signatures(corpus, "doc_id", "text", 8, hash_family="portabel")
+    with pytest.raises(ValueError, match="hash_family"):
+        lsh_candidate_pairs(sigs, "doc_id", 2, 4, hash_family="xxhash")
+    with pytest.raises(ValueError, match="hash_family"):
+        simhash("text", hash_family="md5")
 
 
 def test_simhash_properties(spark, corpus):

@@ -104,6 +104,37 @@ def test_dense_ids_auto_strategy_is_honest(spark, tmp_path):
     assert {(r.val, r.i) for r in auto_small.collect()} == z
 
 
+def test_orig_pieces_mid_scale_takes_zip_path(spark, tmp_path):
+    """Far below fact scale a span table can already be too big for one
+    task to sort: 320k random hits give ~640k distinct spans, estimated
+    at ~7 MB of compressed parquet, so ``orig_pieces`` labels them on
+    the parallel zip path, densely."""
+    from hpc_hd_textreuse_etl_spark.functions.checkpoints import (
+        release_local_checkpoints,
+    )
+    from hpc_hd_textreuse_etl_spark.plans.textreuse import orig_pieces
+
+    def span(side: int) -> list:
+        # rand seeds its partitions with seed + partition index: keep
+        # the four seeds far apart so the sides do not repeat each other
+        start = (F.rand(1000 * side) * 1_000_000).cast("int")
+        return [
+            (F.rand(1000 * side + 500) * 12_500).cast("int").alias(f"trs{side}_id"),
+            start.alias(f"trs{side}_start"),
+            (start + 50).alias(f"trs{side}_end"),
+        ]
+
+    path = str(tmp_path / "hits")
+    spark.range(320_000).select(*span(1), *span(2)).write.parquet(path)
+    pieces = orig_pieces(spark.read.parquet(path))
+    try:
+        assert not _has_window(pieces)
+        n, top = pieces.agg(F.count("*"), F.max("piece_id")).first()
+        assert n > 600_000 and top == n
+    finally:
+        release_local_checkpoints()
+
+
 def test_zip_checkpoint_release_frees_pinned_blocks(spark):
     """ADVICE item: zip_with_index's eager localCheckpoint pins a copy of
     the input in executor storage that clearCache() cannot see; the

@@ -1,9 +1,7 @@
 """``spread_small_input``: the partition count it decides on, and the
-jobs it must not run while the caller builds its plan."""
+jobs it must not run on a scan while the caller builds its plan."""
 
 from __future__ import annotations
-
-import pyspark.sql.functions as F
 
 from hpc_hd_textreuse_etl_spark.functions.skew import spread_small_input
 
@@ -29,23 +27,20 @@ def test_spread_small_input_keeps_well_split_scan(spark, tmp_path):
     assert spread_small_input(ranged, min_parts=4) is ranged
 
 
-def test_spread_small_input_runs_no_job_on_shuffled_input(spark):
-    """Neither a shuffled input nor a cached one (whose scan would run
-    the cached plan's shuffle if its RDD were built) runs a job."""
+def test_spread_small_input_runs_no_job_on_scan_input(spark, tmp_path):
+    """Reading the partition count of a file scan or a local checkpoint
+    (what the callers pass) runs no job while the plan is built."""
     sc = spark.sparkContext
-    grouped = spark.range(1000).groupBy((F.col("id") % 10).alias("k")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    cached = grouped.select("k", (F.col("n") + 1).alias("n")).cache()
-    try:
-        for i, df in enumerate((grouped, cached)):
-            group = f"test_spread_small_input_runs_no_job-{i}"
-            sc.setJobGroup(group, group)
-            try:
-                out = spread_small_input(df, min_parts=2)
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
-            assert sorted(r.k for r in out.collect()) == list(range(10))
-    finally:
-        cached.unpersist()
+    path = str(tmp_path / "scan")
+    spark.range(0, 1000, 1, 1).write.parquet(path)
+    scanned = spark.read.parquet(path)
+    pinned = spark.range(0, 1000, 1, 1).localCheckpoint()
+    for i, df in enumerate((scanned, pinned)):
+        group = f"test_spread_small_input_runs_no_job-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            out = spread_small_input(df, min_parts=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+        assert out.rdd.getNumPartitions() == 4

@@ -8,10 +8,11 @@ bounds are the counts measured when the offsets of dense ids became a
 literal and the Registry stopped re-inferring the schemas of snapshots
 it wrote, plus one: a change that brings back a schema-inference job per
 reused snapshot or a broadcast job per dense-id call fails here. The
-``orig_pieces``, ``piece_id_mappings`` and ``defrag_pieces`` bounds are
-the counts measured once dense ids chose their strategy from the size
-estimate alone (at this size both renumberings take the window path),
-plus one.
+``orig_pieces`` and ``defrag_pieces`` bounds are the counts measured
+once dense ids chose their strategy from the size estimate alone, plus
+one: at this size ``orig_pieces`` takes the window path, while the
+defrag targets, whose join Catalyst estimates at ~5.8 MB, take the zip
+path in ``piece_id_mappings``, as they do at benchmark scale.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ MAX_JOBS = {
     "textreuses": 8,
     "orig_pieces": 4,
     "orig_textreuses": 3,
-    "piece_id_mappings": 9,
+    "piece_id_mappings": 12,
     "defrag_pieces": 4,
     "defrag_textreuses": 4,
 }
