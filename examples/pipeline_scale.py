@@ -34,7 +34,9 @@ materialization overhead the registry's snapshot-per-stage contract adds
 
 Hits are written as a zip of 32 JSONL members (Spark writes the lines,
 the driver only streams part files into the archive) so ingest runs
-through the real ``read_zip_jsonl`` scan at its real parallelism.
+through the real ``read_zip_jsonl`` scan, which sizes its tasks by the
+members' compressed bytes (``spark.sql.files.maxPartitionBytes``), at
+most the 32 members.
 
 ``--run`` materializes the full DAG through ``plans/registry.py`` one
 asset at a time in topological order, timing each ``materialise`` call

@@ -6,7 +6,7 @@ stable sorted order (``etl_textreuse/spark_utils.py:140-230``:
 ``materialise_with_int_id``). Ids are contractually dense and sorted —
 ``monotonically_increasing_id`` is NOT a valid substitute.
 
-Two strategies, picked from Catalyst's size estimate of the input
+Two strategies, picked from a size estimate of the input
 (:func:`dense_ids`):
 
 - ``row_number() OVER (ORDER BY keys)`` — one wide window. Catalyst plans
@@ -86,9 +86,10 @@ def zip_with_index(df: DataFrame, id_col: str = "id", offset: int = 1) -> DataFr
     return out.select(id_col, *df.columns)
 
 
-#: dense-id strategy threshold: inputs whose Catalyst size estimate
-#: exceeds this go through the parallel zip path. File-backed estimates
-#: are compressed parquet bytes, 7-15 B per row for span-shaped inputs,
+#: dense-id strategy threshold: inputs whose size estimate
+#: (:func:`plan_size_bytes`) exceeds this go through the parallel zip
+#: path. File-backed estimates are compressed parquet bytes, 7-15 B per
+#: row for span-shaped inputs,
 #: so this admits a few hundred thousand rows to the single-task window
 #: sort — about where it stops beating the zip path on 4 cores (200k
 #: spans: window 0.8 s, zip 1.2 s; 1M: 2.4 s vs 2.0 s; 4M: 10.7 s vs
@@ -96,14 +97,51 @@ def zip_with_index(df: DataFrame, id_col: str = "id", offset: int = 1) -> DataFr
 WINDOW_MAX_BYTES = 4 << 20
 
 
+def _children(node) -> list:
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _has_product_join(plan) -> bool:
+    """Whether the plan joins without an equality key (a cross or range
+    join), whose output can exceed its inputs by their product."""
+    if plan.nodeName() == "Join":
+        cond = plan.condition()
+        conjuncts = [cond.get()] if cond.isDefined() else []
+        while conjuncts:
+            e = conjuncts.pop()
+            if e.nodeName() == "And":
+                conjuncts.extend(_children(e))
+            elif e.nodeName() in ("EqualTo", "EqualNullSafe") and not any(
+                c.foldable() for c in _children(e)
+            ):
+                break
+        else:
+            return True
+    return any(_has_product_join(c) for c in _children(plan))
+
+
 def plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for the optimized plan (bytes), or None
-    if it can't be read. File sources propagate real sizes through
-    filters/projections; plans with no statistics report Long.MaxValue —
-    which :func:`dense_ids` treats as 'too big', the scale-safe
-    direction."""
+    """Size estimate of the input (bytes), or None if it can't be read:
+    the sum of the analyzed plan's leaf relations (file sources report
+    their real sizes, a persisted intermediate counts as the scans it
+    reads), so an equi-join counts as the sum of its sides, not as
+    Catalyst's product of them. A plan with a join on no equality key
+    keeps Catalyst's product. An equi-join whose key repeats on both
+    sides can still exceed the sum; no dense-id input is one (the hits
+    join the document ids on their unique name, and the defrag targets
+    are grouped back to one row per piece). A leaf with no statistics
+    reports Long.MaxValue — which :func:`dense_ids` treats as 'too big',
+    the scale-safe direction."""
     try:
-        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+        qe = df._jdf.queryExecution()
+        plan = qe.analyzed()
+        if _has_product_join(plan):
+            return int(str(qe.optimizedPlan().stats().sizeInBytes()))
+        leaves = plan.collectLeaves()
+        return sum(
+            int(str(leaves.apply(i).stats().sizeInBytes())) for i in range(leaves.size())
+        )
     except Exception:
         return None
 
@@ -111,7 +149,7 @@ def plan_size_bytes(df: DataFrame) -> int | None:
 def dense_ids(df: DataFrame, order_by: list[str], id_col: str = "id") -> DataFrame:
     """Assign dense ids 1..N ordered by ``order_by`` over the given rows.
 
-    One rule picks the strategy from Catalyst's plan-size estimate
+    One rule picks the strategy from the input's size estimate
     (:func:`plan_size_bytes`): the window when the input is provably
     dimension-sized (estimate ≤ :data:`WINDOW_MAX_BYTES`), the parallel
     sorted-zipWithIndex path otherwise — including when no estimate

@@ -15,7 +15,10 @@ import pytest
 import itertools
 
 from hpc_hd_textreuse_etl_spark.operators.clustering import (
-    _components,
+    _FAMILIES,
+    _GATE_MAX,
+    _Batch,
+    _partition,
     adjacency_list,
     chinese_whispers,
     clustered_pieces,
@@ -309,13 +312,163 @@ def test_cluster_pieces_reports_loop_stats(spark):
 
 def test_components_are_cut_whole_across_batches():
     """A partition sorted by component arrives as Arrow batches that may
-    split a component; each component comes out once, whole, in order."""
+    split a component; each component is read once, whole, in order."""
     import pyarrow as pa
 
     key = [1, 1, 1, 4, 4, 7, 9, 9, 9, 9]
-    frame = pa.record_batch({"component": key, "piece_id": list(range(len(key)))})
+    ids = list(range(len(key)))
+    frame = pa.record_batch({
+        "piece_id": ids, "component": key, "cluster_id": ids,
+        "other_piece_ids": [[i] for i in ids], "active": [True] * len(key),
+        "stale": pa.array([0] * len(key), pa.int32()),
+    })
     batches = [frame.slice(0, 2), frame.slice(2, 0), frame.slice(2, 2), frame.slice(4, 3),
                frame.slice(7, 2), frame.slice(9)]
-    got = [(c.column("component")[0].as_py(), c.column("piece_id").to_pylist())
-           for c in _components(iter(batches))]
-    assert got == [(1, [0, 1, 2]), (4, [3, 4]), (7, [5]), (9, [6, 7, 8, 9])]
+    got = _partition(iter(batches))
+    assert got.ids.tolist() == ids
+    assert got.sizes.tolist() == [3, 2, 1, 4]
+    assert _partition(iter([frame.slice(0, 0)])) is None
+
+
+class _Component:
+    """One connected component's loop state with dict vote maps, stepped
+    vertex by vertex: the loop :class:`_Batch` replaced, kept as its
+    reference."""
+
+    def __init__(self, rows):
+        def column(name, dtype):
+            return np.array(rows.column(name).to_numpy(), dtype=dtype)
+
+        self.ids = column("piece_id", np.int64)
+        self.labels = column("cluster_id", np.int64)
+        self.active = column("active", bool)
+        self.stale = column("stale", np.int64)
+        index = {p: i for i, p in enumerate(self.ids.tolist())}
+        n = len(self.ids)
+        neighbours = rows.column("other_piece_ids").to_pylist()
+        self.nbrs = [[index.get(o, -1) for o in row] for row in neighbours]
+        self.counts = []
+        labels = self.labels.tolist()
+        for row, idx in zip(neighbours, self.nbrs):
+            c = {}
+            for o, j in zip(row, idx):
+                k = labels[j] if 0 <= j < n else int(o)
+                c[k] = c.get(k, 0) + 1
+            self.counts.append(c)
+
+    def step(self, it, seed, family, tie_freeze):
+        coins, accept = _FAMILIES[family]
+        act = np.flatnonzero(self.active)
+        best = np.empty(len(act), dtype=np.int64)
+        tied = np.zeros(len(act), dtype=bool)
+        tie_at, tie_key, tie_rank = [], [], []
+        for a, i in enumerate(act.tolist()):
+            c = self.counts[i]
+            top = max(c.values())
+            keys = sorted(k for k, v in c.items() if v == top)
+            best[a] = keys[0]
+            if len(keys) > 1:
+                tied[a] = True
+                for j, k in enumerate(keys[1:], start=2):
+                    tie_at.append(a)
+                    tie_key.append(k)
+                    tie_rank.append(j)
+        if tie_at:
+            at = np.array(tie_at, dtype=np.int64)
+            key = np.array(tie_key, dtype=np.int64)
+            ok = accept(coins([self.ids[act[at]], key], (it, seed)),
+                        np.array(tie_rank, dtype=np.int64))
+            for a, k in zip(at[ok].tolist(), key[ok].tolist()):
+                best[a] = k
+        old = self.labels[act]
+        move = (best != old) & (coins([self.ids[act]], (it, seed + 1)) <= _GATE_MAX)
+        n = len(self.ids)
+        received = np.zeros(n, dtype=bool)
+        for v, o, nw in zip(act[move].tolist(), old[move].tolist(), best[move].tolist()):
+            for j in self.nbrs[v]:
+                if 0 <= j < n:
+                    c = self.counts[j]
+                    left = c.get(o, 0) - 1
+                    if left:
+                        c[o] = left
+                    else:
+                        del c[o]
+                    c[nw] = c.get(nw, 0) + 1
+                    received[j] = True
+        self.labels[act[move]] = best[move]
+        self.stale = np.where(received, 0, self.stale + 1)
+        was_tied = np.zeros(n, dtype=bool)
+        was_tied[act] = tied
+        if tie_freeze is not None:
+            was_tied &= self.stale < tie_freeze
+        self.active = was_tied | received
+
+
+def _random_components(rng):
+    """Rows of 1-4 components, sorted by component: a random multigraph
+    each (parallel edges, self-loops), symmetric, plus neighbour ids
+    that are no vertex of the component (no vertex at all, or one of
+    another component), and a random mid-run state."""
+    import pyarrow as pa
+
+    rows = {k: [] for k in ("piece_id", "other_piece_ids", "component",
+                            "cluster_id", "active", "stale")}
+    next_id = int(rng.integers(1, 50))
+    for _ in range(int(rng.integers(1, 5))):
+        earlier = list(rows["piece_id"])
+        ids = list(range(next_id, next_id + int(rng.integers(1, 9))))
+        next_id = ids[-1] + int(rng.integers(1, 4))
+        nbrs = {v: [] for v in ids}
+        pairs = [(ids[i - 1], ids[i]) for i in range(1, len(ids))]  # connected
+        pairs += [tuple(rng.choice(ids, 2)) for _ in range(int(rng.integers(0, 3 * len(ids))))]
+        for a, b in pairs:
+            nbrs[int(a)].append(int(b))
+            nbrs[int(b)].append(int(a))
+        for v in ids:
+            if not nbrs[v] or rng.random() < 0.2:
+                nbrs[v].append(10_000 + int(rng.integers(0, 4)))
+            if earlier and rng.random() < 0.2:
+                nbrs[v].append(int(rng.choice(earlier)))
+            rng.shuffle(nbrs[v])
+            rows["piece_id"].append(v)
+            rows["other_piece_ids"].append(nbrs[v])
+            rows["component"].append(ids[0])
+            rows["cluster_id"].append(int(rng.choice(nbrs[v] + [v])))
+            rows["active"].append(bool(rng.random() < 0.8))
+            rows["stale"].append(int(rng.integers(0, 7)))
+    rows["stale"] = pa.array(rows["stale"], pa.int32())
+    return pa.table(rows)
+
+
+@pytest.mark.parametrize("family", ["xxhash64", "portable"])
+@pytest.mark.parametrize("tie_freeze", [None, 5])
+def test_batch_step_matches_per_component_loop(family, tie_freeze):
+    """One vectorised step over a batch of whole components equals each
+    component's vertex-by-vertex step, iteration after iteration: labels,
+    active, staleness and vote maps (an idle component only ages)."""
+    rng = np.random.default_rng(17 if tie_freeze else 29)
+    for case in range(40):
+        rows = _random_components(rng)
+        comp = rows.column("component").to_numpy()
+        cuts = np.flatnonzero(np.r_[True, comp[1:] != comp[:-1], True])
+        ref = [_Component(rows.slice(a, b - a)) for a, b in zip(cuts[:-1], cuts[1:])]
+        got = _Batch(rows)
+        seed, it = int(rng.integers(0, 100)), int(rng.integers(0, 6))
+        for _ in range(12):
+            if not got.active.any():
+                break
+            got.step(it, seed, family, tie_freeze)
+            for c in ref:
+                if c.active.any():
+                    c.step(it, seed, family, tie_freeze)
+                else:
+                    c.stale += 1
+            it += 1
+            keys, votes = got.vote_maps()
+            where = f"case {case}, iteration {it}"
+            assert got.labels.tolist() == sum((c.labels.tolist() for c in ref), []), where
+            assert got.active.tolist() == sum((c.active.tolist() for c in ref), []), where
+            assert got.stale.tolist() == sum((c.stale.tolist() for c in ref), []), where
+            assert [list(zip(k, v)) for k, v in zip(keys.to_pylist(), votes.to_pylist())] == [
+                sorted(m.items()) for c in ref for m in c.counts
+            ], where

@@ -135,6 +135,37 @@ def test_orig_pieces_mid_scale_takes_zip_path(spark, tmp_path):
         release_local_checkpoints()
 
 
+def test_dense_ids_estimate_sums_join_sides(spark, tmp_path):
+    """An equi-join is estimated as the sum of its sides' scans, not as
+    Catalyst's product of them: 4 000 facts re-keyed through a 200-row
+    dimension take the window. A join on no equality key can fan out to
+    the product of its sides, so it keeps Catalyst's estimate and the
+    zip path."""
+    from hpc_hd_textreuse_etl_spark.functions.checkpoints import (
+        release_local_checkpoints,
+    )
+    from hpc_hd_textreuse_etl_spark.functions.ids import WINDOW_MAX_BYTES
+
+    facts, dims = str(tmp_path / "facts"), str(tmp_path / "dims")
+    spark.range(4_000).select((F.col("id") % 200).alias("k"), F.col("id").alias("v")) \
+        .write.parquet(facts)
+    spark.range(200).select(F.col("id").alias("k"), F.format_string("n%d", "id").alias("name")) \
+        .write.parquet(dims)
+    f, d = spark.read.parquet(facts), spark.read.parquet(dims)
+    joined = f.join(d, "k")
+    catalyst = int(str(joined._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    assert catalyst > WINDOW_MAX_BYTES
+    ids = dense_ids(joined, ["v"], "i")
+    assert _has_window(ids)
+    assert [r.i for r in ids.orderBy("v").collect()] == list(range(1, 4_001))
+    crossed = dense_ids(f.crossJoin(d.filter("k < 5").select("name")), ["v", "name"], "i")
+    try:
+        assert not _has_window(crossed)
+        assert crossed.count() == 20_000
+    finally:
+        release_local_checkpoints()
+
+
 def test_zip_checkpoint_release_frees_pinned_blocks(spark):
     """ADVICE item: zip_with_index's eager localCheckpoint pins a copy of
     the input in executor storage that clearCache() cannot see; the

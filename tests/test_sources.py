@@ -8,6 +8,7 @@ import json
 import zipfile
 
 import pytest
+from pyspark.sql import types as T
 
 from hpc_hd_textreuse_etl_spark.catalog import materialise, path_exists
 from hpc_hd_textreuse_etl_spark.functions.dates import (
@@ -89,6 +90,145 @@ def test_read_jsonl_files_matches_zip_scan(spark, hits_zip, tmp_path):
     assert sorted(map(tuple, via_files.collect())) == sorted(
         map(tuple, via_zip.collect())
     )
+
+
+def _zip(path, members: dict[str, str]) -> str:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, text in members.items():
+            zf.writestr(name, text)
+    return str(path)
+
+
+def _jobs_and_tasks(spark, group: str, action) -> tuple[int, int, object]:
+    """Run ``action`` in a job group; its job count, task count, result."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(
+        tracker.getStageInfo(stage).numTasks
+        for job in jobs
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+    return len(jobs), tasks, out
+
+
+def test_read_zip_jsonl_small_archive_is_one_task(spark, hits_zip):
+    """A small archive is one job of one task, whatever ``num_partitions``
+    allows: the scan is sized by bytes, not spread over the cores."""
+    jobs, tasks, rows = _jobs_and_tasks(spark, "zip-small", lambda: read_zip_jsonl(
+        spark, hits_zip, HIT_SCHEMA, num_partitions=4,
+        member_filter=lambda m: m.endswith(".jsonl"),
+    ).collect())
+    assert len(rows) == 3
+    assert (jobs, tasks) == (1, 1)
+
+
+def test_read_zip_jsonl_tasks_follow_max_partition_bytes(spark, tmp_path):
+    """Tasks = min(num_partitions, members, ceil(compressed bytes /
+    spark.sql.files.maxPartitionBytes)), and every row is read once."""
+    import math
+
+    line = json.dumps({"text1_id": "a", "text2_id": "b", "align_length": 1}) + "\n"
+    members = {f"m{k}.jsonl": line * (k + 1) for k in range(6)}
+    path = _zip(tmp_path / "six.zip", members)
+    with zipfile.ZipFile(path) as zf:
+        total = sum(i.compress_size for i in zf.infolist())
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    try:
+        for max_bytes, num_partitions in [(total // 3 + 1, 8), (total // 3 + 1, 2), (1, 4),
+                                          (1, 200), (total, 8)]:
+            spark.conf.set(key, str(max_bytes))
+            jobs, tasks, rows = _jobs_and_tasks(
+                spark, f"zip-{max_bytes}-{num_partitions}",
+                lambda: read_zip_jsonl(spark, path, HIT_SCHEMA, num_partitions).collect(),
+            )
+            want = min(num_partitions, len(members), math.ceil(total / max_bytes))
+            assert (jobs, tasks) == (1, want), (max_bytes, num_partitions)
+            assert len(rows) == sum(range(1, 7))
+    finally:
+        spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize(
+    "line, error",
+    [
+        ('{"text1_id": "a", "align_length": ', "JSONDecodeError"),
+        ('{"text1_id": "a", "align_length": "12"}', "align_length"),
+        ('{"text1_id": "a", "align_length": 3000000000}', "not in range"),
+        ('{"text1_id": "a", "align_length": 1.5}', "align_length"),
+        ('{"text1_id": 7}', "text1_id"),
+    ],
+    ids=["malformed", "string_in_int", "int_out_of_range", "fraction_in_int", "int_in_string"],
+)
+def test_read_zip_jsonl_bad_values_raise(spark, tmp_path, line, error):
+    """Ingestion fails loudly: a value the schema cannot hold is never
+    truncated, nulled, dropped or rewritten (a number in a string field
+    would have lost an id's leading zeros)."""
+    path = _zip(tmp_path / "bad.zip", {"a.jsonl": '{"text1_id": "ok"}\n' + line + "\n"})
+    with pytest.raises(Exception, match=error):
+        read_zip_jsonl(spark, path, HIT_SCHEMA).collect()
+
+
+def test_read_zip_jsonl_blank_lines_and_missing_keys(spark, tmp_path):
+    path = _zip(tmp_path / "gaps.zip", {
+        "a.jsonl": '\n{"text1_id": "x", "align_length": 4}\n   \n\n{"positives_percent": 91.5}\n',
+        "b.jsonl": "",
+    })
+    rows = read_zip_jsonl(spark, path, HIT_SCHEMA).collect()
+    assert sorted((r.text1_id or "", r.align_length, r.positives_percent, r.text2_id)
+                  for r in rows) == [("", None, 91.5, None), ("x", 4, None, None)]
+
+
+def test_read_zip_jsonl_widens_integers_in_floating_fields(spark, tmp_path):
+    """A writer may print a whole double as ``91``: it reads as 91.0,
+    also when no row of the batch holds a fraction."""
+    path = _zip(tmp_path / "ints.zip", {"a.jsonl": '{"positives_percent": 91}\n'})
+    rows = read_zip_jsonl(spark, path, HIT_SCHEMA).collect()
+    assert [r.positives_percent for r in rows] == [91.0]
+
+
+def test_read_zip_jsonl_custom_opener_runs_on_workers(spark, hits_zip, tmp_path):
+    """The opener travels with the task and opens the archive where the
+    task runs, not only on the driver."""
+    import os
+
+    seen = tmp_path / "opened"
+    seen.mkdir()
+
+    def opener(path):
+        (seen / str(os.getpid())).touch()
+        return open(path, "rb")
+
+    rows = read_zip_jsonl(spark, hits_zip, HIT_SCHEMA, opener=opener,
+                          member_filter=lambda m: m.endswith(".jsonl")).collect()
+    assert len(rows) == 3
+    assert {p.name for p in seen.iterdir()} - {str(os.getpid())}
+
+
+def test_read_zip_jsonl_rows_match_line_parse_on_benchmark_archive(spark, tmp_path):
+    """On the benchmark's seed-3 hits archive the scan yields exactly the
+    rows a line-by-line ``json.loads`` of every member gives."""
+    from trbench import gen
+
+    gen.write_hits(str(tmp_path), 3)
+    path = str(tmp_path / "blast_hits.zip")
+    names = T.StructType.fromDDL(gen.HIT_SCHEMA).fieldNames()
+    with zipfile.ZipFile(path) as zf:
+        want = sorted(
+            tuple(json.loads(line).get(k) for k in names)
+            for m in zf.namelist()
+            for line in zf.read(m).decode().splitlines() if line.strip()
+        )
+    df = read_zip_jsonl(spark, path, gen.HIT_SCHEMA, num_partitions=4)
+    assert df.schema == T.StructType.fromDDL(gen.HIT_SCHEMA)
+    assert len(want) == 4_000
+    assert sorted(map(tuple, df.collect())) == want
 
 
 def test_read_csv_with_schema(spark, tmp_path):

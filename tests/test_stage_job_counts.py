@@ -10,9 +10,12 @@ it wrote, plus one: a change that brings back a schema-inference job per
 reused snapshot or a broadcast job per dense-id call fails here. The
 ``orig_pieces`` and ``defrag_pieces`` bounds are the counts measured
 once dense ids chose their strategy from the size estimate alone, plus
-one: at this size ``orig_pieces`` takes the window path, while the
-defrag targets, whose join Catalyst estimates at ~5.8 MB, take the zip
-path in ``piece_id_mappings``, as they do at benchmark scale.
+one. The ``textreuses`` and ``piece_id_mappings`` bounds are the counts
+measured once that estimate summed the plan's leaf relations instead of
+multiplying the sides of a join, plus one: at this size every dense-id
+input takes the window path, as at benchmark scale. The
+``clustered_defrag_pieces`` bound is its count, with Chinese Whispers at
+the benchmark's settings, plus one.
 """
 
 from __future__ import annotations
@@ -29,12 +32,13 @@ N_HITS = 500
 #: stage -> most jobs its Registry.materialise call may run
 MAX_JOBS = {
     "textreuse_ids": 4,
-    "textreuses": 8,
+    "textreuses": 4,
     "orig_pieces": 4,
     "orig_textreuses": 3,
-    "piece_id_mappings": 12,
+    "piece_id_mappings": 9,
     "defrag_pieces": 4,
     "defrag_textreuses": 4,
+    "clustered_defrag_pieces": 12,
 }
 
 
@@ -82,6 +86,9 @@ def _registry() -> Registry:
     reg.add("defrag_textreuses", deps=["orig_textreuses", "piece_id_mappings"],
             builder=lambda s, orig_textreuses, piece_id_mappings: D.defrag_textreuses(
                 orig_textreuses.select("piece1_id", "piece2_id"), piece_id_mappings))
+    reg.add("clustered_defrag_pieces", deps=["defrag_textreuses"],
+            builder=lambda s, defrag_textreuses: TR.cluster_pieces(
+                defrag_textreuses, max_iter=8, tie_freeze=5, min_active=0.001))
     return reg
 
 
