@@ -569,8 +569,8 @@ def cw_probe(spark, data_dir: str, max_iter: int = 250) -> dict:
     import time as _time
 
     from hpc_hd_textreuse_etl_spark.operators.clustering import (
-        adjacency_list,
         chinese_whispers,
+        symmetrize_edges,
     )
 
     edges = spark.read.parquet(
@@ -587,7 +587,7 @@ def cw_probe(spark, data_dir: str, max_iter: int = 250) -> dict:
         ("reference_semantics", None, 40, 0),
         ("tie_freeze_with_floor", 5, max_iter, 0.001),
     ):
-        adj = adjacency_list(edges)
+        adj = symmetrize_edges(edges)
         t0 = _time.time()
         state, iters = chinese_whispers(
             adj, max_iter=cap, seed=42, tie_freeze=tf, min_active=floor

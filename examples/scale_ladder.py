@@ -948,11 +948,11 @@ def run_skew(spark, out_path: str) -> None:
     # 4d. hot hub: Chinese Whispers with a celebrity vertex — one node
     # adjacent to half the graph. CLP's natural failure mode is this
     # vertex's per-iteration vote map (one entry per DISTINCT neighbor
-    # cluster), not a shuffle key: the adjacency row itself is one
-    # array in one task.
+    # cluster), not a shuffle key: a component's edge rows are one
+    # task's input.
     from hpc_hd_textreuse_etl_spark.operators.clustering import (
-        adjacency_list,
         chinese_whispers,
+        symmetrize_edges,
     )
 
     n_cw = 50_000
@@ -970,8 +970,8 @@ def run_skew(spark, out_path: str) -> None:
         F.lit(0).cast("long").alias("piece1_id"),
         F.col("id").alias("piece2_id"),
     )
-    adj_u = adjacency_list(ring).persist()
-    adj_h = adjacency_list(ring.unionByName(hub)).persist()
+    adj_u = symmetrize_edges(ring).persist()
+    adj_h = symmetrize_edges(ring.unionByName(hub)).persist()
     adj_u.count(), adj_h.count()
 
     def _cw_best(adj) -> float:

@@ -20,20 +20,28 @@ algorithm:
 - the loop stops once the active count is within ``min_active``, or at
   ``max_iter``.
 
-How it runs. A vote never crosses a connected component, so the
-components are computed once (:func:`operators.graph.connected_components`),
-the adjacency is shuffled once by component (each component's rows
-adjacent in one partition) and pinned, and the whole loop runs in
+How it runs. A vote never crosses a connected component, so the input
+edge rows (``piece_id``, ``other_piece_id``) are read once by
+:func:`operators.graph.star_forest`, which writes every component as a
+star around its smallest id, and once more to group them: each row
+left-joins the star forest on its ``piece_id`` (a star's centre and a
+self-loop-only piece are their own component), and one shuffle by
+component puts each component's rows in one partition, sorted by
+``(component, piece_id)``, where they are pinned. The whole loop runs in
 Python inside a ``mapInArrow`` task per partition, so the number of
 Spark jobs does not grow with the iteration count (at benchmark size
-Spark's fixed per-job overhead, not the rows, is the cost). A task
-holds its partition's whole components as flat NumPy arrays
-(:class:`_Batch`) and steps them all at once: per iteration, one sort
-of the active vertices' (vertex, neighbour label) pairs gives every
-vote map, and the arg-max, the tie reservoir, the coins and the moves
-are each one vectorised call. Stepping each component on its own cost
-about 0.85 s of CPU per pass over the 656 components (2 943 vertices)
-of trbench's seed-3 graph on a 4-vCPU host; the batch step takes about
+Spark's fixed per-job overhead, not the rows, is the cost): 7 jobs in
+all at trbench's seed 3 — the star forest's exchange and write, the
+join's broadcast, the shuffle, the two passes below — where building an
+adjacency list first, for the components and again for the grouping,
+cost 11. A task holds its partition's whole components as flat NumPy
+arrays (:class:`_Batch`), its sorted rows being the adjacency in CSR
+order, and steps them all at once: per iteration, one sort of the
+active vertices' (vertex, neighbour label) pairs gives every vote map,
+and the arg-max, the tie reservoir, the coins and the moves are each
+one vectorised call. Stepping each component on its own cost about
+0.85 s of CPU per pass over the 656 components (2 943 vertices) of
+trbench's seed-3 graph on a 4-vCPU host; the batch step takes about
 0.02 s. The vote map is not carried between iterations as data: it
 always equals the multiset of the neighbours' labels, so each step
 rebuilds it from the labels.
@@ -59,8 +67,9 @@ loop as unstable, ``assets/README.md:250-251``):
   ``hash_family="portable"``, of the md5-based cross-engine hash that
   DuckDB also computes.
 - **Resume**: the final state goes to ``{checkpoint}/clusters_counts_{T % 2}``
-  (partitioned by ``active``, the reference's table layout) and
-  ``{checkpoint}/clp_meta`` records ``T``; a later call with
+  (partitioned by ``active``, the reference's table layout) and the text
+  file ``{checkpoint}/clp_iter`` records ``T``, written through the
+  Hadoop ``FileSystem`` without a Spark job; a later call with
   ``resume=True`` continues from it.
 
 Limit: a component's adjacency must fit in one Python worker. The
@@ -177,24 +186,17 @@ def symmetrize_edges(edges: DataFrame, src: str = "piece1_id", dst: str = "piece
     return a.unionAll(b)
 
 
-def adjacency_list(edges: DataFrame, src: str = "piece1_id", dst: str = "piece2_id") -> DataFrame:
-    """``(piece_id, other_piece_ids: array<long>)`` (reference ``:36-44``)."""
-    return (
-        symmetrize_edges(edges, src, dst)
-        .groupBy("piece_id")
-        .agg(F.collect_list("other_piece_id").alias("other_piece_ids"))
-    )
-
-
 class _Batch:
     """The loop state of whole connected components, as flat arrays.
 
-    Vertices are indexed ``0..n-1`` in input order (each component's rows
-    adjacent). The adjacency is flat, in CSR order: neighbour occurrence
-    ``e`` of vertex ``src[e]`` is vertex ``nbr[e]``, or ``-1`` for an id
-    that is not a vertex of the same component (only possible for a
-    hand-built adjacency), which keeps its own id ``ext[e]`` as its
-    label and never moves. A component with no active vertex only ages
+    Built from edge rows sorted by ``(component, piece_id)``, one row per
+    neighbour occurrence, each carrying its source vertex's state.
+    Vertices are indexed ``0..n-1`` in that order, so the rows are
+    already the adjacency in CSR order: neighbour occurrence ``e`` of
+    vertex ``src[e]`` is vertex ``nbr[e]``, or ``-1`` for an id that is
+    not a vertex of the same component (only possible for a hand-built,
+    asymmetric input), which keeps its own id ``ext[e]`` as its label
+    and never moves. A component with no active vertex only ages
     (staleness grows by one per step), as it would after converging
     alone, so one step over the batch is one step of each component.
     """
@@ -203,16 +205,16 @@ class _Batch:
         def column(name: str, dtype) -> np.ndarray:
             return np.array(rows.column(name).to_numpy(), dtype=dtype)
 
-        self.ids = column("piece_id", np.int64)
-        self.labels = column("cluster_id", np.int64)
-        self.active = column("active", bool)
-        self.stale = column("stale", np.int64)
-        comp = column("component", np.int64)
+        pid = column("piece_id", np.int64)
+        first = np.flatnonzero(np.r_[True, pid[1:] != pid[:-1]])
+        self.ids = pid[first]
+        self.labels = column("cluster_id", np.int64)[first]
+        self.active = column("active", bool)[first]
+        self.stale = column("stale", np.int64)[first]
+        comp = column("component", np.int64)[first]
         self.sizes = np.diff(np.flatnonzero(np.r_[True, comp[1:] != comp[:-1], True]))
-        lists = rows.column("other_piece_ids").combine_chunks()
-        deg = lists.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
-        self.ext = np.asarray(lists.flatten().to_numpy(), dtype=np.int64)
-        self.src = np.repeat(np.arange(len(self.ids)), deg)
+        self.ext = column("other_piece_id", np.int64)
+        self.src = np.repeat(np.arange(len(first)), np.diff(np.r_[first, len(pid)]))
         by_id = np.argsort(self.ids, kind="stable")
         at = np.minimum(np.searchsorted(self.ids, self.ext, sorter=by_id), len(by_id) - 1)
         j = by_id[at]
@@ -279,13 +281,13 @@ class _Batch:
 
 def _partition(batches) -> _Batch | None:
     """A partition's whole components, from its Arrow batches (rows
-    sorted by ``component``; a component may span batches)."""
+    sorted by ``(component, piece_id)``; a component may span batches)."""
     batches = [b for b in batches if b.num_rows]
     return _Batch(pa.Table.from_batches(batches)) if batches else None
 
 
 def chinese_whispers(
-    adj: DataFrame,
+    edges: DataFrame,
     max_iter: int = 100,
     seed: int = 42,
     checkpoint: str | None = None,
@@ -298,8 +300,10 @@ def chinese_whispers(
     """Run the loop; returns ``(state, iterations)`` where state has
     ``(piece_id, cluster_id, cluster_counts, active, stale)``.
 
-    ``adj`` must be a symmetric adjacency list (see :func:`adjacency_list`).
-    A vertex with an empty neighbour list takes no part.
+    ``edges`` holds ``(piece_id, other_piece_id)`` rows, one per
+    neighbour occurrence, symmetric as :func:`symmetrize_edges` gives
+    them (parallel edges count twice). A vertex with no row takes no
+    part.
 
     ``resume=True`` with a durable ``checkpoint`` dir continues from the
     iteration recorded there (fixing the reference's hard-coded
@@ -343,35 +347,36 @@ def chinese_whispers(
     """
     if hash_family not in _FAMILIES:
         raise ValueError(f"unknown hash_family {hash_family!r}")
-    from hpc_hd_textreuse_etl_spark.catalog import delete_path, path_exists
+    from hpc_hd_textreuse_etl_spark.catalog import (
+        delete_path,
+        path_exists,
+        read_text,
+        write_text,
+    )
     from hpc_hd_textreuse_etl_spark.functions.checkpoints import (
         release_checkpoint,
         session_temp_dir,
         tracked_local_checkpoint,
     )
-    from hpc_hd_textreuse_etl_spark.operators.graph import connected_components
+    from hpc_hd_textreuse_etl_spark.operators.graph import star_forest
 
-    spark = adj.sparkSession
+    spark = edges.sparkSession
     if checkpoint is None:
         checkpoint = session_temp_dir("clp-checkpoint-")
-    meta_path = f"{checkpoint}/clp_meta"
+    iter_path = f"{checkpoint}/clp_iter"
     cc_path = f"{checkpoint}/cc"
 
-    adj = adj.filter(F.size("other_piece_ids") > 0)
-    components = connected_components(
-        adj.select("piece_id", F.explode("other_piece_ids").alias("other")),
-        src="piece_id", dst="other", checkpoint_dir=cc_path,
-    ).withColumnRenamed("node", "piece_id")
-    # a piece whose only edges are self-loops is in no component's edge
-    # set: it is its own component (what ``nodes=`` would add, without
-    # that option's extra distinct and join)
-    grouped = adj.join(components, "piece_id", "left").withColumn(
-        "component", F.coalesce("component", "piece_id")
+    edges = edges.select("piece_id", "other_piece_id")
+    forest = star_forest(edges, "piece_id", "other_piece_id", checkpoint_dir=cc_path)
+    # a node that is no star's leaf is its component's smallest id, or
+    # has only self-loops and is its own component
+    grouped = edges.join(forest, edges["piece_id"] == forest["u"], "left").select(
+        "piece_id", "other_piece_id", F.coalesce("v", "piece_id").alias("component")
     )
     it0 = 0
-    resumed = resume and path_exists(spark, meta_path)
+    resumed = resume and path_exists(spark, iter_path)
     if resumed:
-        it0 = spark.read.schema("iter int").parquet(meta_path).first()["iter"]
+        it0 = int(read_text(spark, iter_path))
         state = _read_checkpoint(spark, checkpoint, it0)
         grouped = grouped.join(
             state.select("piece_id", "cluster_id", "active", "stale"), "piece_id"
@@ -383,11 +388,12 @@ def chinese_whispers(
             F.lit(True).alias("active"),
             F.lit(0).alias("stale"),
         )
-    # one shuffle puts every component in one partition, rows of a
-    # component adjacent; pinned by pass 1's job and read from there by
-    # pass 2, which may overwrite the slot a resumed state came from
+    # one shuffle puts every component in one partition, its rows in
+    # (component, piece_id) order; pinned by pass 1's job and read from
+    # there by pass 2, which may overwrite the slot a resumed state came
+    # from
     grouped = tracked_local_checkpoint(
-        grouped.repartition("component").sortWithinPartitions("component"),
+        grouped.repartition("component").sortWithinPartitions("component", "piece_id"),
         eager=False,
     )
     def run(batches, stop: int) -> tuple[_Batch | None, list[int]]:
@@ -451,9 +457,9 @@ def chinese_whispers(
                     "stale": state.stale.astype(np.int32),
                 })
 
-        # clp_meta is the commit marker: a crash before it is rewritten
+        # clp_iter is the commit marker: a crash before it is rewritten
         # restarts from iteration 0 instead of reading a half-written slot
-        delete_path(spark, meta_path)
+        delete_path(spark, iter_path)
         (
             grouped.mapInArrow(
                 final,
@@ -468,9 +474,7 @@ def chinese_whispers(
             .write.mode("overwrite").option("compression", "zstd")
             .partitionBy("active").parquet(f"{checkpoint}/clusters_counts_{stop % 2}")
         )
-        spark.range(0, 1, 1, 1).select(F.lit(stop).alias("iter")).write.mode(
-            "overwrite"
-        ).parquet(meta_path)
+        write_text(spark, iter_path, str(stop))
         state = _read_checkpoint(spark, checkpoint, stop)
     release_checkpoint(grouped)
     delete_path(spark, cc_path)

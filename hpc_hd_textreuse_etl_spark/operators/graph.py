@@ -131,17 +131,18 @@ def _checksum_metrics() -> tuple:
     )
 
 
-def connected_components(
+def star_forest(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    nodes: DataFrame | None = None,
-    node_col: str = "node",
     max_iter: int = 50,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """``(node, component)`` — component = smallest node id reachable
-    from ``node``; deterministic, partition-count independent.
+    """``(u, v)`` for every node ``u`` of an edge that is not the
+    smallest id of its component, ``v`` being that smallest id: each
+    component as one star around its smallest node, so ``u`` is unique.
+    A node of no edge (or only of self-loops) has no row, and neither
+    has a component's smallest node.
 
     Round 0 contracts each task's edges by union-find into a star forest
     and writes it to ``{checkpoint_dir}/edges_0``. If one task emitted
@@ -149,10 +150,7 @@ def connected_components(
     star rounds continue from the contracted edges, alternating between
     ``edges_1`` and ``edges_0``, until a round repeats its input;
     ``max_iter`` bounds the star rounds, and exceeding it raises
-    ``RuntimeError``.
-
-    ``nodes`` (optional, one column ``node_col``) adds isolated vertices
-    that appear in no edge; they label themselves.
+    ``RuntimeError``. The result reads the last round's parquet.
 
     ``checkpoint_dir`` must be a path visible to every executor (HDFS /
     object store) — the per-round parquet round-trip is the lineage
@@ -191,6 +189,27 @@ def connected_components(
             raise RuntimeError(
                 f"connected_components: no fixpoint in {max_iter} rounds"
             )
+    return e
+
+
+def connected_components(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    nodes: DataFrame | None = None,
+    node_col: str = "node",
+    max_iter: int = 50,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """``(node, component)`` — component = smallest node id reachable
+    from ``node``; deterministic, partition-count independent. The
+    labels of :func:`star_forest`, whose ``max_iter`` and
+    ``checkpoint_dir`` these are.
+
+    ``nodes`` (optional, one column ``node_col``) adds isolated vertices
+    that appear in no edge; they label themselves.
+    """
+    e = star_forest(edges, src, dst, max_iter=max_iter, checkpoint_dir=checkpoint_dir)
     labels = e.select(F.col("u").alias(node_col), F.col("v").alias("component")).union(
         e.select(F.col("v").alias(node_col), F.col("v").alias("component"))
     ).distinct()

@@ -1449,9 +1449,9 @@ def chinese_whispers_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     bipartite graph (operators/clustering.py). Deterministic row count =
     vertex count for the driver's rows-only check."""
     from hpc_hd_textreuse_etl_spark.operators.clustering import (
-        adjacency_list,
         chinese_whispers,
         clustered_pieces,
+        symmetrize_edges,
     )
 
     edges = (
@@ -1462,7 +1462,7 @@ def chinese_whispers_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    state, _ = chinese_whispers(adjacency_list(edges), max_iter=20, seed=42)
+    state, _ = chinese_whispers(symmetrize_edges(edges), max_iter=20, seed=42)
     return clustered_pieces(state)
 
 
@@ -1484,9 +1484,9 @@ def cw_component_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     stale-state bug in the CW loop would make this nonzero and fail the
     value-hash."""
     from hpc_hd_textreuse_etl_spark.operators.clustering import (
-        adjacency_list,
         chinese_whispers,
         clustered_pieces,
+        symmetrize_edges,
     )
     from hpc_hd_textreuse_etl_spark.operators.graph import connected_components
     from hpc_hd_textreuse_etl_spark.plans.qc import cluster_component_violations
@@ -1499,7 +1499,7 @@ def cw_component_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    state, _ = chinese_whispers(adjacency_list(edges), max_iter=20, seed=42)
+    state, _ = chinese_whispers(symmetrize_edges(edges), max_iter=20, seed=42)
     cw = clustered_pieces(state)
     cc = connected_components(
         edges.select(F.col("piece1_id").alias("src"), F.col("piece2_id").alias("dst"))
@@ -1535,9 +1535,9 @@ def cw_intra_edge_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragmenting mid-star) lands far below it. n_edges doubles as an
     exact row-count anchor so the gate can't pass on an empty join."""
     from hpc_hd_textreuse_etl_spark.operators.clustering import (
-        adjacency_list,
         chinese_whispers,
         clustered_pieces,
+        symmetrize_edges,
     )
 
     edges = (
@@ -1548,7 +1548,7 @@ def cw_intra_edge_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    state, _ = chinese_whispers(adjacency_list(edges), max_iter=20, seed=42)
+    state, _ = chinese_whispers(symmetrize_edges(edges), max_iter=20, seed=42)
     cw = clustered_pieces(state)
     lab1 = cw.select(
         F.col("piece_id").alias("piece1_id"), F.col("cluster_id").alias("l1")
@@ -1727,9 +1727,9 @@ def chinese_whispers_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence bookkeeping — against an independent relational
     recomputation, iteration by iteration."""
     from hpc_hd_textreuse_etl_spark.operators.clustering import (
-        adjacency_list,
         chinese_whispers,
         clustered_pieces,
+        symmetrize_edges,
     )
 
     base = (
@@ -1750,7 +1750,7 @@ def chinese_whispers_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("cid").over(w).alias("piece2_id"),
     ).filter(F.col("piece2_id").isNotNull())
     state, _ = chinese_whispers(
-        adjacency_list(star.unionAll(chain)),
+        symmetrize_edges(star.unionAll(chain)),
         max_iter=8, seed=42, hash_family="portable",
     )
     return clustered_pieces(state)

@@ -94,19 +94,20 @@ class Registry:
         clear_cache_per_asset: bool = False,
         default_target_files: int | None = None,
     ) -> dict[str, DataFrame]:
-        """Materialize the closure of ``targets`` under ``base_dir``.
+        """Materialize the closure of ``targets`` under ``base_dir`` and
+        return the targets, plus every dependency a rebuilt asset read.
 
         Existing complete snapshots (``_SUCCESS`` marker) are reused:
-        builders of satisfied assets never even construct their plan. To
-        rebuild an asset, materialise into a fresh ``base_dir``.
+        builders of satisfied assets never even construct their plan, and
+        nothing upstream of a reused snapshot is checked or read. To
+        rebuild an asset, materialise into a fresh ``base_dir``. The
+        whole closure is still validated: a cycle raises
+        :class:`CycleError` and an unknown recipe ``KeyError``.
 
         A reused snapshot is read with the schema this ``Registry`` wrote
         or first read it with, so its schema is inferred (one
-        footer-reading job) at most once per path per ``Registry``. That
-        matters because every call walks its targets' whole dependency
-        closure: a pipeline that materialises stage by stage would
-        otherwise pay one inference job per upstream snapshot per call.
-        A snapshot this ``Registry`` has not seen (resuming in a new
+        footer-reading job) at most once per path per ``Registry``. A
+        snapshot this ``Registry`` has not seen (resuming in a new
         process) is still inferred; reuse across processes without
         inference needs a manifest written with each snapshot, which
         does not exist yet.
@@ -136,10 +137,25 @@ class Registry:
             release_local_checkpoints,
         )
 
+        order = self.order(targets)
+        # walking dependents before their dependencies, an asset is
+        # needed if it is a target or a rebuilt asset's dependency
+        needed = set(targets) if targets else set(order)
+        reused: set[str] = set()
+        for name in reversed(order):
+            if name not in needed:
+                continue
+            if snapshot_is_valid(spark, table_path(base_dir, name)):
+                reused.add(name)
+            else:
+                needed.update(self._recipes[name].deps)
+
         done: dict[str, DataFrame] = {}
-        for name in self.order(targets):
+        for name in order:
+            if name not in needed:
+                continue
             path = table_path(base_dir, name)
-            if snapshot_is_valid(spark, path):
+            if name in reused:
                 known = self._schemas.get(path)
                 reader = spark.read if known is None else spark.read.schema(known)
                 done[name] = reader.parquet(path)

@@ -7,7 +7,7 @@ Stage map (reference asset → builder here):
 - ``orig_pieces``         ← assets/orig_textreuses.py:14-38
 - ``orig_textreuses``     ← assets/orig_textreuses.py:41-65
 - defrag tables           ← operators/defrag.py (ipynb cells 2-6)
-- ``adjacency_list`` / clusters ← operators/clustering.py (:32-200)
+- ``symmetrize_edges`` / clusters ← operators/clustering.py (:32-200)
 - ``textreuse_source_lengths``  ← assets/coverages.py:13-28
 - ``coverages``           ← assets/coverages.py:36-165
 - earliest / non-source / ``reception_edges`` ← assets/downstream_clusters.py:114-150, assets/reception.py:14-102
@@ -300,9 +300,8 @@ def cluster_pieces(
     through to :func:`chinese_whispers` — the convergence knobs
     (tie-cycle freeze, activity floor) production callers need on
     tie-rich corpora."""
-    adj = C.adjacency_list(defrag_textreuses)
     state, iters = C.chinese_whispers(
-        adj, max_iter=max_iter, seed=seed,
+        C.symmetrize_edges(defrag_textreuses), max_iter=max_iter, seed=seed,
         tie_freeze=tie_freeze, min_active=min_active, stats=stats,
     )
     if stats is not None:

@@ -12,11 +12,17 @@ handling, partition coalescing) and Arrow for the Pandas-UDF path.
 from __future__ import annotations
 
 import os
+import site
 import zipfile
+from importlib.machinery import PathFinder
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "hpc-hd-textreuse-etl-spark"
+#: entries of Spark's generated-class cache: trbench's ``reuse_etl`` at
+#: seed 3 compiles 86 distinct classes in its curation set-up and 128 in
+#: one ETL pass, so 512 holds both with room to spare
+CODEGEN_CACHE_ENTRIES = 512
 
 
 def default_parallelism() -> int:
@@ -54,6 +60,29 @@ def _ship_package(spark: SparkSession) -> None:
         return
     spark.sparkContext.addPyFile(_build_package_zip())
     spark.sparkContext._pkg_shipped = True
+
+
+def _worker_daemon_conf(master: str) -> dict[str, str]:
+    """``spark.python.daemon.module`` set to :mod:`daemon`, which keeps
+    Spark's zip archives off the Python workers' path (see its
+    docstring), or nothing.
+
+    Only on local masters, whose workers start in this process's
+    current directory with its ``PYTHONPATH``, and only when a fresh
+    interpreter there can import the package: from the current
+    directory, ``PYTHONPATH`` or site-packages. Everywhere else Spark's
+    default daemon stays."""
+    if not (master == "local" or master.startswith("local[")):
+        return {}
+    pkg = __name__.rpartition(".")[0]
+    pythonpath = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    roots = [os.getcwd(), *pythonpath, *site.getsitepackages(), site.getusersitepackages()]
+    spec = PathFinder.find_spec(pkg, roots)
+    if spec is None or not spec.origin or not os.path.isfile(
+        os.path.join(os.path.dirname(spec.origin), "daemon.py")
+    ):
+        return {}
+    return {"spark.python.daemon.module": f"{pkg}.daemon"}
 
 
 def _build_package_zip() -> str:
@@ -94,13 +123,8 @@ def get_spark(
     ``local[N]`` explicitly.
     """
     cpus = default_parallelism()
-    builder = SparkSession.builder.appName(app_name)
-    if master:
-        builder = builder.master(master)
-    elif "SPARK_MASTER" in os.environ:
-        builder = builder.master(os.environ["SPARK_MASTER"])
-    else:
-        builder = builder.master(f"local[{cpus}]")
+    master = master or os.environ.get("SPARK_MASTER") or f"local[{cpus}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
 
     conf = {
         # -- correctness-critical (shared with oracle comparisons) --
@@ -128,6 +152,11 @@ def get_spark(
         "spark.driver.memory": os.environ.get(
             "SPARK_GRAFT_DRIVER_MEM", default_driver_memory()
         ),
+        # Spark's default of 100 generated classes is smaller than one
+        # ETL pass, whose cyclic access pattern then evicts every class
+        # before its next use: every pass recompiled about 130 of them
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        **_worker_daemon_conf(master),
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -51,9 +51,9 @@ def main() -> int:
 
     def chain(source):
         from hpc_hd_textreuse_etl_spark.operators.clustering import (
-            adjacency_list,
             chinese_whispers,
             clustered_pieces,
+            symmetrize_edges,
         )
         from hpc_hd_textreuse_etl_spark.operators.dedup import (
             minhash_near_duplicates,
@@ -68,7 +68,7 @@ def main() -> int:
         edges = pairs.select(
             F.col("id_a").alias("piece1_id"), F.col("id_b").alias("piece2_id")
         )
-        state, _ = chinese_whispers(adjacency_list(edges), max_iter=10, seed=7)
+        state, _ = chinese_whispers(symmetrize_edges(edges), max_iter=10, seed=7)
         clusters = clustered_pieces(state)
         return (
             sorted(tuple(r) for r in sampled.select("doc_id").collect()),

@@ -19,11 +19,11 @@ from hpc_hd_textreuse_etl_spark.operators.clustering import (
     _GATE_MAX,
     _Batch,
     _partition,
-    adjacency_list,
     chinese_whispers,
     clustered_pieces,
     coins_portable,
     coins_xxhash64,
+    symmetrize_edges,
     tie_accept_portable,
     tie_accept_xxhash64,
 )
@@ -35,7 +35,7 @@ def _clique(nodes):
 
 def _run(spark, edges, **kw):
     df = spark.createDataFrame(edges, "piece1_id long, piece2_id long")
-    adj = adjacency_list(df)
+    adj = symmetrize_edges(df)
     state, iters = chinese_whispers(adj, **kw)
     return {r.piece_id: r.cluster_id for r in clustered_pieces(state).collect()}, iters
 
@@ -69,7 +69,7 @@ def test_resume_matches_uninterrupted_run(spark, tmp_path):
     straight, straight_iters = _run(spark, edges, max_iter=25, seed=3)
 
     ckpt = str(tmp_path / "clp")
-    adj = adjacency_list(df)
+    adj = symmetrize_edges(df)
     chinese_whispers(adj, max_iter=3, seed=3, checkpoint=ckpt)
     state, resumed_iters = chinese_whispers(
         adj, max_iter=25, seed=3, checkpoint=ckpt, resume=True
@@ -92,12 +92,12 @@ def test_tie_freeze_converges_where_reference_semantics_never_do(spark):
     df = spark.createDataFrame(edges, "piece1_id long, piece2_id long")
 
     state_ref, iters_ref = chinese_whispers(
-        adjacency_list(df), max_iter=20, seed=42, tie_freeze=None
+        symmetrize_edges(df), max_iter=20, seed=42, tie_freeze=None
     )
     assert iters_ref == 20  # capped, not converged
     assert state_ref.filter("active").count() > 0  # ties still churning
 
-    state, iters = chinese_whispers(adjacency_list(df), max_iter=20, seed=42)
+    state, iters = chinese_whispers(symmetrize_edges(df), max_iter=20, seed=42)
     assert iters < 20  # converged before the cap
     assert state.filter("active").count() == 0
     clusters = {r.piece_id: r.cluster_id for r in clustered_pieces(state).collect()}
@@ -115,12 +115,12 @@ def test_min_active_floor_terminates_early(spark):
     edges = _clique(range(1, 6)) + _clique(range(10, 15))
     df = spark.createDataFrame(edges, "piece1_id long, piece2_id long")
 
-    state, iters = chinese_whispers(adjacency_list(df), max_iter=30, min_active=100)
+    state, iters = chinese_whispers(symmetrize_edges(df), max_iter=30, min_active=100)
     assert iters == 0  # floor above vertex count: nothing to do
 
-    _, exact_iters = chinese_whispers(adjacency_list(df), max_iter=30)
+    _, exact_iters = chinese_whispers(symmetrize_edges(df), max_iter=30)
     _, floored_iters = chinese_whispers(
-        adjacency_list(df), max_iter=30, min_active=0.5
+        symmetrize_edges(df), max_iter=30, min_active=0.5
     )
     assert floored_iters <= exact_iters
     assert exact_iters < 30  # exact semantics unchanged: converges to 0
@@ -256,7 +256,7 @@ def _outcome(state):
 @pytest.mark.parametrize("name", sorted(_PINNED))
 def test_pinned_trajectories(spark, name):
     edges, kw, t, labels, active = _PINNED[name]
-    adj = adjacency_list(spark.createDataFrame(edges, "piece1_id long, piece2_id long"))
+    adj = symmetrize_edges(spark.createDataFrame(edges, "piece1_id long, piece2_id long"))
     state, iters = chinese_whispers(adj, **kw)
     assert iters == t
     assert _outcome(state) == (labels, active)
@@ -264,7 +264,7 @@ def test_pinned_trajectories(spark, name):
 
 def test_pinned_trajectory_resumes_after_three_iterations(spark, tmp_path):
     edges, kw, t, labels, active = _PINNED["floor"]
-    adj = adjacency_list(spark.createDataFrame(edges, "piece1_id long, piece2_id long"))
+    adj = symmetrize_edges(spark.createDataFrame(edges, "piece1_id long, piece2_id long"))
     ckpt = str(tmp_path / "clp")
     _, first = chinese_whispers(adj, checkpoint=ckpt, **dict(kw, max_iter=3))
     assert first == 3
@@ -275,12 +275,12 @@ def test_pinned_trajectory_resumes_after_three_iterations(spark, tmp_path):
 
 def test_checkpoint_layout_and_stats(spark, tmp_path, monkeypatch):
     """The final state is written where a reader of the checkpoint dir
-    finds it (``clusters_counts_{T % 2}/active=true|false``, ``clp_meta``
-    holding T), the components' temp state stays inside the checkpoint
-    dir, and ``stats`` reports the run."""
+    finds it (``clusters_counts_{T % 2}/active=true|false``, the text
+    file ``clp_iter`` holding T), the components' temp state stays inside
+    the checkpoint dir, and ``stats`` reports the run."""
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     edges, kw, t, _, active = _PINNED["hub"]
-    adj = adjacency_list(spark.createDataFrame(edges, "piece1_id long, piece2_id long"))
+    adj = symmetrize_edges(spark.createDataFrame(edges, "piece1_id long, piece2_id long"))
     stats: dict = {}
     state, iters = chinese_whispers(adj, stats=stats, **kw)
     (ckpt,) = glob.glob(str(tmp_path / "clp-checkpoint-*"))
@@ -288,7 +288,8 @@ def test_checkpoint_layout_and_stats(spark, tmp_path, monkeypatch):
     slot = os.path.join(ckpt, f"clusters_counts_{t % 2}")
     assert os.path.isdir(os.path.join(slot, "active=true"))
     assert os.path.isdir(os.path.join(slot, "active=false"))
-    assert spark.read.parquet(os.path.join(ckpt, "clp_meta")).first()["iter"] == t
+    with open(os.path.join(ckpt, "clp_iter")) as fh:
+        assert fh.read() == str(t)
     assert len(stats["active_per_iter"]) == t
     assert stats["active_per_iter"][-1] == state.filter("active").count() == len(active)
     assert stats["components"] == 1
@@ -311,22 +312,23 @@ def test_cluster_pieces_reports_loop_stats(spark):
 
 
 def test_components_are_cut_whole_across_batches():
-    """A partition sorted by component arrives as Arrow batches that may
-    split a component; each component is read once, whole, in order."""
+    """A partition sorted by ``(component, piece_id)`` arrives as Arrow
+    batches that may split a component, or one vertex's edge rows; each
+    component is read once, whole, in order."""
     import pyarrow as pa
 
-    key = [1, 1, 1, 4, 4, 7, 9, 9, 9, 9]
-    ids = list(range(len(key)))
+    pid = [0, 0, 1, 2, 2, 2, 3, 4, 5, 5, 6, 7, 8, 9, 9]
+    key = [0, 0, 0, 0, 0, 0, 3, 3, 5, 5, 6, 6, 6, 6, 6]
     frame = pa.record_batch({
-        "piece_id": ids, "component": key, "cluster_id": ids,
-        "other_piece_ids": [[i] for i in ids], "active": [True] * len(key),
-        "stale": pa.array([0] * len(key), pa.int32()),
+        "piece_id": pid, "other_piece_id": pid, "component": key, "cluster_id": pid,
+        "active": [True] * len(pid), "stale": pa.array([0] * len(pid), pa.int32()),
     })
-    batches = [frame.slice(0, 2), frame.slice(2, 0), frame.slice(2, 2), frame.slice(4, 3),
-               frame.slice(7, 2), frame.slice(9)]
+    batches = [frame.slice(0, 1), frame.slice(1, 0), frame.slice(1, 3), frame.slice(4, 5),
+               frame.slice(9, 4), frame.slice(13)]
     got = _partition(iter(batches))
-    assert got.ids.tolist() == ids
+    assert got.ids.tolist() == list(range(10))
     assert got.sizes.tolist() == [3, 2, 1, 4]
+    assert got.src.tolist() == pid
     assert _partition(iter([frame.slice(0, 0)])) is None
 
 
@@ -440,6 +442,18 @@ def _random_components(rng):
     return pa.table(rows)
 
 
+def _edge_rows(rows):
+    """The adjacency rows of :func:`_random_components` as the edge rows
+    :class:`_Batch` reads: one per neighbour occurrence, in (component,
+    piece_id) order, each carrying its vertex's state."""
+    import pyarrow as pa
+
+    lists = rows.column("other_piece_ids").combine_chunks()
+    at = pa.array(np.repeat(np.arange(rows.num_rows), lists.value_lengths().to_numpy()))
+    return rows.drop_columns(["other_piece_ids"]).take(at).append_column(
+        "other_piece_id", lists.flatten())
+
+
 @pytest.mark.parametrize("family", ["xxhash64", "portable"])
 @pytest.mark.parametrize("tie_freeze", [None, 5])
 def test_batch_step_matches_per_component_loop(family, tie_freeze):
@@ -452,7 +466,7 @@ def test_batch_step_matches_per_component_loop(family, tie_freeze):
         comp = rows.column("component").to_numpy()
         cuts = np.flatnonzero(np.r_[True, comp[1:] != comp[:-1], True])
         ref = [_Component(rows.slice(a, b - a)) for a, b in zip(cuts[:-1], cuts[1:])]
-        got = _Batch(rows)
+        got = _Batch(_edge_rows(rows))
         seed, it = int(rng.integers(0, 100)), int(rng.integers(0, 6))
         for _ in range(12):
             if not got.active.any():

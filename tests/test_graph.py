@@ -11,7 +11,7 @@ from contextlib import contextmanager
 
 import pytest
 
-from hpc_hd_textreuse_etl_spark.operators.graph import connected_components
+from hpc_hd_textreuse_etl_spark.operators.graph import connected_components, star_forest
 
 
 def _run(spark, edges, nodes=None, **kw):
@@ -124,6 +124,22 @@ def test_one_task_round_zero_is_the_answer(spark, tmp_path):
     got = connected_components(e, checkpoint_dir=str(tmp_path))
     assert {(r.node, r.component) for r in got.collect()} == _union_find_labels(edges)
     assert sorted(os.listdir(tmp_path)) == ["edges_0"]  # no star round ran
+
+
+def test_star_forest_has_unique_u_on_multi_task_path(spark, tmp_path):
+    """After a multi-task round 0 and star rounds, the forest is one star
+    per component: each node but the component's smallest id is a ``u``
+    exactly once, and its ``v`` is that smallest id."""
+    rng = random.Random(11)
+    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(400)]
+    edges += [(2000 + i, 2001 + i) if i % 2 else (2001 + i, 2000 + i) for i in range(150)]
+    rng.shuffle(edges)
+    e = spark.createDataFrame(edges, "src long, dst long")
+    with _uncoalesced(spark):
+        rows = [(r.u, r.v) for r in star_forest(e, checkpoint_dir=str(tmp_path)).collect()]
+    assert os.path.exists(tmp_path / "edges_1")  # star rounds ran
+    assert len({u for u, _ in rows}) == len(rows)
+    assert set(rows) == {(n, c) for n, c in _union_find_labels(edges) if n != c}
 
 
 # ---------------------------------------------------------------------------

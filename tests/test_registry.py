@@ -86,6 +86,76 @@ def test_reuse_reads_known_schema_without_jobs(spark, tmp_path):
     assert again["base"].schema == inferred.schema
 
 
+def _chain(calls):
+    """a <- b <- c <- d, each built from the one before."""
+    reg = Registry()
+
+    @reg.add("a")
+    def a(spark):
+        calls.append("a")
+        return spark.range(5)
+
+    def step(name, dep):
+        def build(spark, **deps):
+            calls.append(name)
+            return deps[dep].select((F.col("id") + 1).alias("id"))
+
+        reg.add(name, deps=[dep], builder=build)
+
+    for dep, name in (("a", "b"), ("b", "c"), ("c", "d")):
+        step(name, dep)
+    return reg
+
+
+def test_reuse_reads_only_what_builders_consume(spark, tmp_path, monkeypatch):
+    """A reused snapshot ends the walk: nothing upstream of it is checked
+    or read. A rebuilt asset's direct dependencies are checked and read;
+    their own dependencies only if they are rebuilt too."""
+    import shutil
+
+    from hpc_hd_textreuse_etl_spark.plans import registry as R
+
+    checked = []
+    valid = R.snapshot_is_valid
+    monkeypatch.setattr(R, "snapshot_is_valid",
+                        lambda s, path: checked.append(path) or valid(s, path))
+    calls = []
+    reg = _chain(calls)
+    base = str(tmp_path)
+    reg.materialise(spark, base, ["d"])
+    assert calls == ["a", "b", "c", "d"]
+
+    checked.clear()
+    out = reg.materialise(spark, base, ["d"])
+    assert calls == ["a", "b", "c", "d"]
+    assert checked == [str(tmp_path / "d.parquet")]
+    assert set(out) == {"d"}
+
+    shutil.rmtree(tmp_path / "d.parquet")
+    checked.clear()
+    out = reg.materialise(spark, base, ["d"])
+    assert calls[4:] == ["d"]
+    assert checked == [str(tmp_path / "d.parquet"), str(tmp_path / "c.parquet")]
+    assert set(out) == {"c", "d"}
+    assert [r.id for r in out["d"].orderBy("id").collect()] == [3, 4, 5, 6, 7]
+
+
+def test_reuse_still_validates_whole_closure(spark, tmp_path):
+    """A reused target still raises on a cycle or an unknown recipe
+    anywhere in its closure."""
+    calls = []
+    reg = _chain(calls)
+    reg.materialise(spark, str(tmp_path), ["d"])
+    reg.add("a", deps=["d"], builder=lambda spark, d: d)
+    with pytest.raises(CycleError):
+        reg.materialise(spark, str(tmp_path), ["d"])
+    reg = _chain(calls)
+    reg.add("a", deps=["ghost"], builder=lambda spark, ghost: ghost)
+    with pytest.raises(KeyError, match="ghost"):
+        reg.materialise(spark, str(tmp_path), ["d"])
+    assert calls == ["a", "b", "c", "d"]
+
+
 def test_partial_snapshot_rebuilt(spark, tmp_path):
     """A crashed write (directory without _SUCCESS) must be rebuilt, not
     trusted."""
